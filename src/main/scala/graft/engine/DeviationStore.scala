@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.broadcast.Broadcast
@@ -144,18 +144,26 @@ class DeviationStore(spark: SparkSession, path: String) {
     // PG's NULLS-NOT-DISTINCT uniq index rejects a batch that affects the
     // same key twice ("cannot affect row a second time"); silently committing
     // duplicates would be self-sustaining (both rows re-match old every later
-    // sync) — fail loudly like the reference. One small agg over the batch.
-    val dupKeys = nw.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupKeys == 0,
+    // sync) — fail loudly like the reference, before the commit. One small
+    // agg over the batch also yields `upserted` (every produced row).
+    val counts = nw.groupBy(keyCols.map(col): _*).count()
+      .agg(coalesce(sum("count"), lit(0L)), coalesce(max("count"), lit(0L))).collect()(0)
+    val upserted = counts.getLong(0)
+    require(counts.getLong(1) <= 1,
       s"sync_deviations($viewName): view emitted duplicate uniq-key rows — " +
         "the reference's ON CONFLICT would reject this batch")
     val nwK = keyed(nw, "n_")
     val oldK = keyed(oldView, "o_")
     val joinCond = keyCols.map(k => col(s"n_$k") <=> col(s"o_$k")).reduce(_ && _)
 
-    // full outer merge on the uniq key
-    val merged = nwK.join(oldK, joinCond, "full_outer")
+    // full outer merge on the uniq key; `deleted` counts the old rows the
+    // deletion rule drops, in the commit's own pass
+    val actioned = col("o_action").isNotNull && col("o_action") =!= "deferred"
+    val isNew = col("n_title_present")
+    val isOld = col("o_title_present")
+    val deletions = Observation()
+    val merged = nwK.join(oldK, joinCond, "full_outer").observe(deletions,
+      count(when(isOld.isNotNull && isNew.isNull && !actioned, 1)).as("deleted"))
 
     val withMeta = munis match {
       case Some(b) =>
@@ -166,10 +174,6 @@ class DeviationStore(spark: SparkSession, path: String) {
             coalesce(col("n_center"), col("o_center"))))
       case None => merged.withColumn("__muni", lit(null).cast("string"))
     }
-
-    val actioned = col("o_action").isNotNull && col("o_action") =!= "deferred"
-    val isNew = col("n_title_present")
-    val isOld = col("o_title_present")
 
     val result = withMeta
       // old-only rows survive only if user-actioned (deletion rule)
@@ -192,16 +196,12 @@ class DeviationStore(spark: SparkSession, path: String) {
         col("o_action").as("action"),
         col("o_action_at").as("action_at"))
 
-    val upserted = nw.count()
-    val deleted = oldK.join(nwK, joinCond, "left_anti").filter(!actionedO).count()
     commitView(viewName,
       result.unionByName(oldOut.select(schema.fieldNames.map(col): _*)),
       s"sync:$viewName")
     old.unpersist(); nw.unpersist()
-    (upserted, deleted)
+    (upserted, deletions.get("deleted").asInstanceOf[Long])
   }
-
-  private val actionedO = col("o_action").isNotNull && col("o_action") =!= "deferred"
 
   /** prefix all columns and add a presence marker (for full-outer bookkeeping) */
   private def keyed(df: DataFrame, p: String): DataFrame = {

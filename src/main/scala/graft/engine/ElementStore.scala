@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.core.cell.Grid
 
 /**
@@ -20,9 +22,14 @@ import graft.core.cell.Grid
  *    and dropped, without any full-table scan.
  *
  * Per-batch work is O(batch + touched partitions), never O(history): merge
- * reads exactly the dirty blocks plus ≤idxBuckets narrow index slices and
- * dynamically overwrites only those partitions. On a real cluster both
- * layers map 1:1 onto Iceberg MERGE INTO with the same partition specs.
+ * and pruned reads open only the `cb=`/`kb=` directories they touch, by
+ * path, with a schema the store already knows — no call lists the whole
+ * table or infers a schema. A merge into an existing sub-store runs a fixed
+ * set of jobs whatever the store's size: the batch's (cb, kb) set, the old
+ * blocks of its keys, the data and index writes, and a batch-key broadcast
+ * per join (7 with AQE off; ElementStoreSpec pins the budget). Merges of
+ * different sub-stores may run concurrently. On a real cluster both layers
+ * map 1:1 onto Iceberg MERGE INTO with the same partition specs.
  */
 class ElementStore(spark: SparkSession, path: String,
                    val blockMeters: Double = 10000.0, idxBuckets: Int = 64) {
@@ -44,21 +51,33 @@ class ElementStore(spark: SparkSession, path: String,
   private def dataPath(name: String) = s"$path/$name/data"
   private def idxPath(name: String) = s"$path/$name/idx"
 
+  /** row schema per sub-store: recorded by merge (the batch's own), else
+    * read once from the data with `cb` pinned to long */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+  private def schemaOf(name: String): StructType = schemas.getOrElseUpdate(name,
+    StructType(spark.read.parquet(dataPath(name)).schema.map(f =>
+      if (f.name == "cb") f.copy(dataType = LongType) else f)))
+
+  private def bucketOf(keyCols: Seq[String]): Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
+
+  /** the existing `part=v` directories of `values` under `root`, read by path */
+  private def readParts(root: String, part: String, values: Seq[Any],
+                        schema: StructType): DataFrame = {
+    val dirs = values.map(v => s"$root/$part=$v").filter(d => Files.exists(Paths.get(d)))
+    spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
+  }
+
   /** current state (optionally partition-pruned to `blocks`). */
   def read(name: String, blocks: Option[Seq[Long]] = None): DataFrame = {
-    val p = dataPath(name)
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(p)),
-      s"element store '$name' not initialized")
-    // partition-dir values re-infer — pin cb back to long
-    val df = spark.read.parquet(p).withColumn("cb", col("cb").cast("long"))
+    require(exists(name), s"element store '$name' not initialized")
     blocks match {
-      case Some(bs) => df.filter(col("cb").isin(bs: _*)) // partition pruning
-      case None     => df
+      case Some(bs) => readParts(dataPath(name), "cb", bs.distinct, schemaOf(name))
+      case None => spark.read.schema(schemaOf(name)).parquet(dataPath(name))
     }
   }
 
-  def exists(name: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dataPath(name)))
+  def exists(name: String): Boolean = Files.exists(Paths.get(dataPath(name)))
 
   /**
    * MERGE `batch` (upsert by `keyCols`) into sub-store `name`. The batch must
@@ -73,90 +92,72 @@ class ElementStore(spark: SparkSession, path: String,
     // removes OLD rows, so an un-deduped batch would write duplicate key rows
     // (ADVICE r2). Keep exactly one row per key — by `recencyCol` desc when
     // the caller has one, else an arbitrary-but-single representative
-    // (dropDuplicates), matching the index-side dedup rule.
+    // (dropDuplicates). Every later step relies on `b` being unique per key.
+    val keys = keyCols.map(col)
     val b0 = batch.withColumn("cb", blockCol(col("cx"), col("cy")))
     val bd = recencyCol match {
       case Some(rc) =>
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCols.map(col): _*).orderBy(col(rc).desc)
+          .partitionBy(keys: _*).orderBy(col(rc).desc)
         b0.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       case None => b0.dropDuplicates(keyCols)
     }
+    schemas.put(name, bd.schema)
     val b = bd.cache()
-    val keyHash = pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
-    val bKeys = b.select(keyCols.map(col): _*).distinct().cache()
-
-    val first = !exists(name)
-    if (!first) ensureIndex(name, keyCols)
-    val dirtyBlocks: Seq[Long] =
-      if (first) b.select("cb").distinct().collect().map(_.getLong(0)).toSeq
-      else {
-        // previous locations of the batch's keys, via the touched index buckets
-        val touchedKb = bKeys.select(keyHash.as("kb")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val idx = spark.read.parquet(idxPath(name)) // ensureIndex guarantees it
-          .withColumn("cb", col("cb").cast("long"))
-          .filter(col("kb").isin(touchedKb: _*))
-        val oldBlocks = idx.join(bKeys, keyCols, "left_semi")
-          .select("cb").distinct().collect().map(_.getLong(0))
-        (b.select("cb").distinct().collect().map(_.getLong(0)) ++ oldBlocks).distinct.toSeq
-      }
-
+    val touched = b.select(col("cb"), bucketOf(keyCols).as("kb")).distinct().collect()
     // An EMPTY batch must not touch the store: a zero-row first write would
     // leave a parquet dir with only _SUCCESS, making exists() true while
     // read() fails on schema inference (ADVICE r2) — skip both writes and
     // leave the store uninitialized (or untouched).
-    if (dirtyBlocks.isEmpty) { b.unpersist(); bKeys.unpersist(); return Nil }
+    if (touched.isEmpty) { b.unpersist(); return Nil }
+    val batchBlocks = touched.map(_.getLong(0)).distinct.toSeq
+    val buckets = touched.map(_.getInt(1)).distinct.toSeq
+
+    val first = !exists(name)
+    if (!first) ensureIndex(name, keyCols)
+    val bKeys = b.select(keys: _*)
+    val idxNew = b.select(keys :+ col("cb") :+ bucketOf(keyCols).as("kb"): _*)
+    // the touched buckets' index rows, read once for both the old-block
+    // lookup and the index rewrite
+    val idxOld = if (first) None else Some(readParts(idxPath(name), "kb", buckets,
+      StructType(keyCols.map(bd.schema(_)) :+ StructField("cb", LongType) :+
+        StructField("kb", IntegerType))).cache())
+    val oldBlocks = idxOld.fold(Seq.empty[Long])(_.join(bKeys, keyCols, "left_semi")
+      .select("cb").distinct().collect().map(_.getLong(0)).toSeq)
+    val dirtyBlocks = (batchBlocks ++ oldBlocks).distinct
 
     // --- data merge: read ONLY dirty blocks, drop batch keys, add batch ---
     val dataCols = b.columns.map(col)
+    val written = Observation()
     val out =
       if (first) b
-      else read(name, Some(dirtyBlocks))
+      else readParts(dataPath(name), "cb", dirtyBlocks, bd.schema)
         .join(bKeys, keyCols, "left_anti")
         .select(dataCols: _*)
         .unionByName(b.select(dataCols: _*))
-    // enumerate surviving blocks BEFORE the overwrite — `out` is a lazy plan
-    // over the files the write replaces
-    val written =
-      if (first) Set.empty[Long]
-      else out.select("cb").distinct().collect().map(_.getLong(0)).toSet
+        // the blocks `out` holds, gathered in the write's own pass (after
+        // it, `out` would re-read the files the write replaced)
+        .observe(written, collect_set(col("cb")).as("cbs"))
     out.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cb").parquet(dataPath(name))
     // a dirty block whose last row vanished is absent from `out` and thus not
     // overwritten — clear its directory explicitly (Iceberg MERGE would)
     if (!first) {
-      dirtyBlocks.filterNot(written).foreach { cb =>
-        val dir = java.nio.file.Paths.get(dataPath(name), s"cb=$cb")
-        if (java.nio.file.Files.exists(dir)) {
-          java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.delete(p))
-        }
-      }
+      val kept = written.get("cbs").asInstanceOf[Iterable[Long]].toSet
+      dirtyBlocks.filterNot(kept).foreach(cb => MatchStore.deleteRecursively(
+        Paths.get(dataPath(name), s"cb=$cb")))
     }
 
     // --- index merge: same pattern over the narrow (key -> cb) table ---
-    val idxNew = b.select((keyCols.map(col) :+ col("cb")): _*)
-      .dropDuplicates(keyCols)
-      .withColumn("kb", keyHash)
-    val idxOut =
-      if (first) idxNew
-      else {
-        val touchedKb = idxNew.select("kb").distinct().collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(idxPath(name)) // ensureIndex guarantees existence
-          .filter(col("kb").isin(touchedKb: _*))
-          .withColumn("cb", col("cb").cast("long"))
-          .join(bKeys, keyCols, "left_anti")
-          .select(idxNew.columns.map(col): _*)
-          .unionByName(idxNew)
-      }
+    val idxOut = idxOld.fold(idxNew)(_.join(bKeys, keyCols, "left_anti")
+      .select(idxNew.columns.map(col): _*).unionByName(idxNew))
     idxOut.write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("kb").parquet(idxPath(name))
 
-    b.unpersist(); bKeys.unpersist()
+    idxOld.foreach(_.unpersist()); b.unpersist()
     dirtyBlocks
   }
 
@@ -170,11 +171,10 @@ class ElementStore(spark: SparkSession, path: String,
     * are out of scope for the parquet stand-in.) */
   private def ensureIndex(name: String, keyCols: Seq[String]): Unit = {
     val ip = idxPath(name)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(ip))) {
-      val keyHash = pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
+    if (!Files.exists(Paths.get(ip))) {
       read(name).select((keyCols.map(col) :+ col("cb")): _*)
         .dropDuplicates(keyCols)
-        .withColumn("kb", keyHash)
+        .withColumn("kb", bucketOf(keyCols))
         .write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(ip)
     }
   }

@@ -97,6 +97,59 @@ class ElementStoreSpec extends AnyFunSuite {
     assert(es.read("elements", None).count() == 1)
   }
 
+  test("a small merge into a many-partition store reads only its partitions, in a fixed job budget") {
+    val dir = java.nio.file.Files.createTempDirectory("estore_budget").toString
+    val es = new ElementStore(spark, dir, blockMeters = 100.0) // 64 index buckets
+    // more block and bucket directories than Spark's 32-path threshold, above
+    // which listing a table root launches a job of one task per directory
+    val nBlocks = 41
+    es.merge("elements", Seq("type", "id"), df((0 until nBlocks * 25).map(i =>
+      ("n", i.toLong, (i % nBlocks) * 100.0 + 50.0, 50.0)): _*))
+    def dirs(sub: String): Long = {
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "elements", sub))
+      try st.filter(java.nio.file.Files.isDirectory(_)).count() finally st.close()
+    }
+    assert(dirs("data") == nBlocks && dirs("idx") == 64)
+
+    val group = s"estore-budget-${System.nanoTime}"
+    val stageTasks = java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, Seq[Int])]()
+    @volatile var flushed = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
+          case `group` => stageTasks.add(e.jobId -> e.stageInfos.map(_.numTasks))
+          case g if g == group + "-flush" => flushed = true
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "merge under a job budget")
+      // an update in place, a move to a new block, and a new key
+      val dirty = es.merge("elements", Seq("type", "id"), df(
+        ("n", 0L, 60.0, 60.0), ("n", 1L, 9050.0, 50.0), ("n", 99999L, 150.0, 50.0)))
+      assert(dirty.toSet.size == 3)
+      // listener events arrive in order: once the flush job shows up, every
+      // job of the merge has been seen
+      spark.sparkContext.setJobGroup(group + "-flush", "listener flush")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!flushed && System.nanoTime < deadline) Thread.sleep(20)
+      assert(flushed, "listener did not see the flush job")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val jobs = stageTasks.asScala.toSeq.sortBy(_._1)
+    val listing = jobs.filter(_._2.exists(n => n == nBlocks || n == 64))
+    assert(listing.isEmpty, s"partition-listing jobs ran: $listing")
+    // the merge's fixed job set, each shuffle stage a job of its own under
+    // this suite's AQE session; it does not grow with the store
+    assert(jobs.size <= 12, s"merge ran ${jobs.size} jobs (budget 12): $jobs")
+    assert(es.read("elements").count() == nBlocks * 25 + 1)
+  }
+
   test("property: random batch sequence matches a last-write-wins key model") {
     val dir = java.nio.file.Files.createTempDirectory("estore_prop").toString
     // small blocks + few keys force in-batch duplicates, moves, block churn,
@@ -107,21 +160,8 @@ class ElementStoreSpec extends AnyFunSuite {
       ((math.floor(cx / 100.0).toLong + OFF) << 32) |
         (math.floor(cy / 100.0).toLong + OFF)
 
-    val rnd = new scala.util.Random(20260818L)
     val model = scala.collection.mutable.Map.empty[(String, Long), (Double, Double, Long)]
-    var seq = 0L
-    (1 to 8).foreach { _ =>
-      val base = (1 to 5 + rnd.nextInt(20)).map { _ =>
-        seq += 1
-        (if (rnd.nextBoolean()) "n" else "w", rnd.nextInt(30).toLong,
-          rnd.nextInt(10) * 100.0 + 50.0, rnd.nextInt(3) * 100.0 + 50.0, seq)
-      }
-      // in-batch duplicate keys: recency (seq) must decide, deterministically
-      val dups = base.take(rnd.nextInt(3)).map { r =>
-        seq += 1
-        (r._1, r._2, rnd.nextInt(10) * 100.0 + 50.0, r._4, seq)
-      }
-      val all = rnd.shuffle(base ++ dups)
+    def step(all: Seq[(String, Long, Double, Double, Long)]): Unit = {
       val preModel = model.toMap
       val dirty = es.merge("el", Seq("type", "id"),
         all.toDF("type", "id", "cx", "cy", "seq"), recencyCol = Some("seq")).toSet
@@ -146,6 +186,31 @@ class ElementStoreSpec extends AnyFunSuite {
           .map(p => blockOf(p._1, p._2)).toSet
       assert(expect.subsetOf(dirty),
         s"dirty blocks missing ${expect.diff(dirty)}")
+    }
+    var seq = 0L
+    def next(): Long = { seq += 1; seq }
+
+    // the first two inputs reach directories that do not exist yet: a
+    // one-key store, then a batch whose every index bucket is new and whose
+    // dirty blocks include one never written
+    val bucket = (0 until 30).map(i => ("n", i.toLong)).toDF("type", "id")
+      .select(col("id"), pmod(xxhash64(col("type"), col("id")), lit(8L)).cast("int"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val fresh = (1L until 30L).filter(bucket(_) != bucket(0L)).take(3)
+    assert(fresh.size == 3)
+    step(Seq(("n", 0L, 50.0, 50.0, next())))
+    step(fresh.map(id => ("n", id, if (id == fresh.head) 50.0 else 950.0, 250.0, next())))
+
+    val rnd = new scala.util.Random(20260818L)
+    (1 to 8).foreach { _ =>
+      val base = (1 to 5 + rnd.nextInt(20)).map { _ =>
+        (if (rnd.nextBoolean()) "n" else "w", rnd.nextInt(30).toLong,
+          rnd.nextInt(10) * 100.0 + 50.0, rnd.nextInt(3) * 100.0 + 50.0, next())
+      }
+      // in-batch duplicate keys: recency (seq) must decide, deterministically
+      val dups = base.take(rnd.nextInt(3)).map(r =>
+        (r._1, r._2, rnd.nextInt(10) * 100.0 + 50.0, r._4, next()))
+      step(rnd.shuffle(base ++ dups))
     }
   }
 }

@@ -205,6 +205,50 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.latest().count() == n2, "replay must not duplicate rows")
   }
 
+  test("a failed concurrent sub-store merge fails the micro-batch; a restart replays it") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("stream_fail_pages").toString
+    val storeDir = Files.createTempDirectory("stream_fail_store").toString
+    val ckpt = Files.createTempDirectory("stream_fail_ckpt").toString
+    val state = Files.createTempDirectory("stream_fail_state").toString
+    val store = new DeviationStore(spark, storeDir)
+    Pages.synthesize(spark, 100L).write.mode("append").parquet(dir)
+    // a plain file where the items sub-store's directory belongs: the items
+    // merge fails on its write while the elements and changesets merges run
+    val blocker = Paths.get(state, "items")
+    Files.write(blocker, Array.emptyByteArray)
+    val q1 = StreamingIngest.startDeviationSync(spark, dir, ckpt, store, state)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q1.awaitTermination())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains(blocker.toString)),
+      s"the items merge's failure must surface: ${chain.map(_.getMessage)}")
+    assert(!Files.exists(Paths.get(ckpt, "commits", "0")), "a failed batch must not commit")
+    assert(store.views.isEmpty, "a failed batch must not sync deviations")
+
+    // restart on the same checkpoint and state: batch 0 replays over the
+    // elements the failed attempt already merged
+    Files.delete(blocker)
+    StreamingIngest.startDeviationSync(spark, dir, ckpt, store, state).awaitTermination()
+    assert(Files.exists(Paths.get(ckpt, "commits", "0")))
+    val es = new graft.engine.ElementStore(spark, state)
+    val pages = spark.read.parquet(dir)
+    assert(es.read("elements").count() ==
+      Pages.extractOsmElements(pages).select("type", "id").distinct().count(),
+      "the replay must leave one element row per key")
+    val cfg = graft.engine.BenchPipeline.config()
+    val want = graft.engine.BenchPipeline.deviations(graft.engine.MatchEngine.matchView(
+      graft.engine.BenchPipeline.filterOsm(es.read("elements")),
+      graft.engine.BenchPipeline.projectUps(es.read("items")), cfg))
+    val keep = (DeviationStore.keyCols :+ "description").map(col) :+
+      to_json(col("suggested_tags")).as("suggested_tags")
+    val got = store.latestFor("bench_pois").select(keep: _*)
+    assert(got.count() > 0)
+    assert(want.select(keep: _*).exceptAll(got).isEmpty &&
+      got.exceptAll(want.select(keep: _*)).isEmpty,
+      "the replayed store must equal a batch recompute over the element state")
+  }
+
   test("flatMapGroupsWithState dedup: later copies suppressed across micro-batches") {
     val dir = java.nio.file.Files.createTempDirectory("fsd").toString
     def write(rows: Seq[(Long, String, String)]): Unit =
