@@ -41,6 +41,9 @@ class DeviationStore(spark: SparkSession, path: String) {
 
   private def viewRoot(view: String) = s"$path/view=$view"
 
+  /** the same store, with its Datasets built from `session` */
+  def withSession(session: SparkSession): DeviationStore = new DeviationStore(session, path)
+
   private def latestVersionOf(view: String): Option[Int] = {
     val p = Paths.get(viewRoot(view), "_latest")
     if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt) else None

@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.core.cell.Grid
@@ -61,11 +61,14 @@ class ElementStore(spark: SparkSession, path: String,
   private def bucketOf(keyCols: Seq[String]): Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
 
-  /** the existing `part=v` directories of `values` under `root`, read by path */
+  /** the existing `part=v` directories of `values` under `root`, read by
+    * path; none existing is an empty local frame, with no data source to
+    * resolve */
   private def readParts(root: String, part: String, values: Seq[Any],
                         schema: StructType): DataFrame = {
     val dirs = values.map(v => s"$root/$part=$v").filter(d => Files.exists(Paths.get(d)))
-    spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
   }
 
   /** current state (optionally partition-pruned to `blocks`). */

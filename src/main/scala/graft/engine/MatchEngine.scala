@@ -276,10 +276,12 @@ object MatchEngine {
     // elements are unique across ups rows) — hashing a LONG for the window
     // shuffle instead of an ARRAY<LONG> per row (VERDICT r1 watch item).
     // CONTRACT: every ups row must carry a NON-EMPTY ids array with a unique
-    // first element — an empty/null-first array keys to __pk = NULL and all
-    // such rows collapse into one window partition (rank-1 keeps a single
-    // row, silently dropping the rest). All registry views satisfy this by
-    // construction (array(id) / sorted collect_list of ≥1 id).
+    // first element — an empty/null-first array would key to __pk = NULL and
+    // all such rows would collapse into one window partition (rank-1 keeps a
+    // single row, silently dropping the rest). All registry views satisfy
+    // this by construction (array(id) / sorted collect_list of ≥1 id); a
+    // NULL key fails the query in-plan (the BM25 overflow guard's
+    // raise_error pattern — no extra action).
     // rank-1: sort window by default; SPARK_GRAFT_RANK_MINBY=true switches
     // to a min_by aggregation over the same unique total order (score,
     // b_type, b_id). The aggregation partial-combines map-side (one
@@ -292,7 +294,11 @@ object MatchEngine {
     // against is already capped by the candidate join — the window's
     // single cheap sort wins. Both forms are oracle-verified identical.
     val rankViaWindow = !sys.env.get("SPARK_GRAFT_RANK_MINBY").contains("true")
-    val keyed = ranked.withColumn("__pk", element_at(col("p_ids"), 1))
+    val firstId = get(col("p_ids"), lit(0))
+    val keyed = ranked.withColumn("__pk", when(firstId.isNotNull, firstId)
+      .otherwise(raise_error(concat(lit("matchView rank-key contract: an upstream " +
+        "row's ids array is null, empty or starts with null (ids = "),
+        coalesce(col("p_ids").cast("string"), lit("NULL")), lit(")")))))
     val ordKey = struct(col("score"), col("b_type"), col("b_id"))
     val top1 =
       if (rankViaWindow) {

@@ -154,22 +154,34 @@ object StreamingIngest {
    * and run concurrently; each reads only the partitions its rows touch, so
    * an edit batch costs a fixed number of Spark jobs per sub-store (see
    * ElementStore), not one per stored partition. Job budget of an edit batch
-   * at AQE off: the merges' fixed sets, the frontier match and deviations,
-   * and 3 jobs for the scoped deviation-store sync — 20 jobs for an 8-site
-   * edit on a 500-site base, whatever the store's size. A failed merge
-   * fails the micro-batch after all three have finished, so the checkpoint
-   * does not advance. Restartable from `checkpointDir`; replays are
-   * idempotent because both merges are keyed upserts.
+   * (the stream's session runs AQE off): the merges' fixed sets, the
+   * frontier match and deviations, and 3 jobs for the scoped deviation-store
+   * sync — 20 jobs for an 8-site edit on a 500-site base, whatever the
+   * store's size. A failed merge fails the micro-batch after all three have
+   * finished, so the checkpoint does not advance. Restartable from
+   * `checkpointDir`; replays are idempotent because both merges are keyed
+   * upserts.
+   *
+   * Codegen gate: a batch whose input files hold less than
+   * `InterpretedBelowBytes` (the batch plan's `sizeInBytes`, from the
+   * source's own file listing) runs with whole-stage codegen off and
+   * interpreted expressions. Compiling costs a fixed price per batch while
+   * interpreting costs per row: with codegen every 8-site edit op of the
+   * `sync_edits` benchmark compiled 236 classes with Janino again (1.9–3.4 s
+   * of a 3.9–6.8 s op on 4 vCPUs), interpreted it compiles 29.
+   * The crossover, measured as a first sync of n sites into a fresh store
+   * on 4 vCPUs (3 interleaved pairs, interpreted / codegen): 0.18 MB of
+   * pages 3.4–5.3 / 4.8–6.7 s, 0.62 MB 5.4–6.7 / 6.2–7.0 s, 1.2 MB
+   * 7.5–8.3 / 7.6–8.9 s, 2.4 MB 10.4–12.9 / 9.8–11.8 s, 9.5 MB 37.6 / 25.5 s.
+   * The mode is set on the stream's own session (a clone of `spark`) for
+   * the batch and restored after it; every Dataset of the batch is built
+   * from that session, and `spark`'s conf is never touched.
    */
   def startDeviationSync(spark: SparkSession, pagesDir: String, checkpointDir: String,
                          store: graft.engine.DeviationStore,
                          statePath: String = null,
                          maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    import graft.engine.{BenchPipeline, ElementStore, MatchEngine}
-    import graft.functions.GeoFunctions.stCentroid
-    import graft.sources.Pages
-    val es = new ElementStore(spark,
-      if (statePath != null) statePath else checkpointDir + "_state")
+    val state = if (statePath != null) statePath else checkpointDir + "_state"
     val schema = spark.read.parquet(pagesDir).schema
     val reader0 = spark.readStream.schema(schema)
     // AvailableNow + maxFilesPerTrigger splits a finite replay into REAL
@@ -182,46 +194,83 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.cache()
-        val dirty = try concurrently(spark, Seq(
-          () => es.merge("elements", Seq("type", "id"), Pages.extractOsmElements(b)),
-          () => es.merge("items", Seq("dataset_id", "original_id"),
-            Pages.extractUpstreamItems(b)),
-          // changesets: keyed MERGE only, no downstream recompute — ingested
-          // but unused, like the reference (04-osm-base.sql:43-49). Empty in
-          // batches without changeset pages (merge skips empty batches).
-          () => { es.merge("changesets", Seq("id"), Pages.extractChangesets(b),
-            recencyCol = Some("created_at")); Nil }
-        )).flatten.distinct finally b.unpersist()
-        // no per-batch caching: a cached candidate set would leak across
-        // micro-batches (matchView unpersists nothing); no checkpoint either:
-        // its blocking localCheckpoint job would run every micro-batch
-        val cfg = BenchPipeline.config()
-          .copy(cacheCandidates = false, checkpointCandidates = false)
-        def view(blocks: Option[Seq[Long]]) =
-          BenchPipeline.deviations(MatchEngine.matchView(
-            BenchPipeline.filterOsm(es.read("elements", blocks)),
-            BenchPipeline.projectUps(es.read("items", blocks)), cfg))
-        if (dirty.size > 256) {
-          // bulk load: the frontier is most of the map — a scoped plan with
-          // thousands of isin literals costs more than one full recompute
-          store.sync("bench_pois", view(None))
-        } else if (dirty.nonEmpty) {
-          // scope = 1-ring around dirty blocks (covers every feature a dirty
-          // feature can match); inputs read one ring wider so every scoped
-          // row sees ALL its potential partners
-          val scopeBlocks = es.ring(dirty)
-          val readBlocks = es.ring(scopeBlocks)
-          val blockOfCenter = es.blockCol(
-            stCentroid(col("center")).getField("_1"),
-            stCentroid(col("center")).getField("_2"))
-          val inScope = blockOfCenter.isin(scopeBlocks: _*)
-          store.syncScoped("bench_pois",
-            view(Some(readBlocks)).filter(inScope), scope = Some(inScope))
+        // the codegen gate (see above), taken before the batch's first job
+        val session = batch.sparkSession
+        val small = batch.queryExecution.optimizedPlan.stats.sizeInBytes < InterpretedBelowBytes
+        withConf(session, if (small) NoCodegen else Nil) {
+          syncBatch(session, batch, new graft.engine.ElementStore(session, state),
+            store.withSession(session))
         }
-        ()
       }
       .start()
+  }
+
+  /** Input size (bytes of the micro-batch's files) below which
+    * `startDeviationSync` runs a batch interpreted: just under the measured
+    * crossover of ~1.2 MB, see its scaladoc. */
+  private val InterpretedBelowBytes: Long = 1L << 20
+
+  /** session confs that run a query without generated code: no whole-stage
+    * codegen, and interpreted projections, predicates and orderings */
+  private val NoCodegen = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** runs `body` with `kvs` set on `session`, then restores what was there */
+  private def withConf[T](session: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+    val set = session.conf.getAll
+    val before = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => session.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
+  }
+
+  /** one micro-batch of `startDeviationSync`, every Dataset built from `session` */
+  private def syncBatch(session: SparkSession, batch: DataFrame,
+                        es: graft.engine.ElementStore,
+                        store: graft.engine.DeviationStore): Unit = {
+    import graft.engine.{BenchPipeline, MatchEngine}
+    import graft.functions.GeoFunctions.stCentroid
+    import graft.sources.Pages
+    val b = batch.cache()
+    val dirty = try concurrently(session, Seq(
+      () => es.merge("elements", Seq("type", "id"), Pages.extractOsmElements(b)),
+      () => es.merge("items", Seq("dataset_id", "original_id"),
+        Pages.extractUpstreamItems(b)),
+      // changesets: keyed MERGE only, no downstream recompute — ingested
+      // but unused, like the reference (04-osm-base.sql:43-49). Empty in
+      // batches without changeset pages (merge skips empty batches).
+      () => { es.merge("changesets", Seq("id"), Pages.extractChangesets(b),
+        recencyCol = Some("created_at")); Nil }
+    )).flatten.distinct finally b.unpersist()
+    // no per-batch caching: a cached candidate set would leak across
+    // micro-batches (matchView unpersists nothing); no checkpoint either:
+    // its blocking localCheckpoint job would run every micro-batch
+    val cfg = BenchPipeline.config()
+      .copy(cacheCandidates = false, checkpointCandidates = false)
+    def view(blocks: Option[Seq[Long]]) =
+      BenchPipeline.deviations(MatchEngine.matchView(
+        BenchPipeline.filterOsm(es.read("elements", blocks)),
+        BenchPipeline.projectUps(es.read("items", blocks)), cfg))
+    if (dirty.size > 256) {
+      // bulk load: the frontier is most of the map — a scoped plan with
+      // thousands of isin literals costs more than one full recompute
+      store.sync("bench_pois", view(None))
+    } else if (dirty.nonEmpty) {
+      // scope = 1-ring around dirty blocks (covers every feature a dirty
+      // feature can match); inputs read one ring wider so every scoped
+      // row sees ALL its potential partners
+      val scopeBlocks = es.ring(dirty)
+      val readBlocks = es.ring(scopeBlocks)
+      val blockOfCenter = es.blockCol(
+        stCentroid(col("center")).getField("_1"),
+        stCentroid(col("center")).getField("_2"))
+      val inScope = blockOfCenter.isin(scopeBlocks: _*)
+      store.syncScoped("bench_pois",
+        view(Some(readBlocks)).filter(inScope), scope = Some(inScope))
+    }
   }
 
   /** Runs `tasks` on threads of their own that carry the caller's Spark

@@ -199,6 +199,13 @@ class ElementStoreSpec extends AnyFunSuite {
     val fresh = (1L until 30L).filter(bucket(_) != bucket(0L)).take(3)
     assert(fresh.size == 3)
     step(Seq(("n", 0L, 50.0, 50.0, next())))
+    // a read of blocks none of which exists: an empty local frame of the
+    // store's schema, without a data source to resolve
+    val none = es.read("el", Some(Seq(blockOf(950.0, 250.0))))
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(typed(none) == typed(es.read("el")) && none.count() == 0)
+    assert(none.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     step(fresh.map(id => ("n", id, if (id == fresh.head) 50.0 else 950.0, 250.0, next())))
 
     val rnd = new scala.util.Random(20260818L)

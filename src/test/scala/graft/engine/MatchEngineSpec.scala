@@ -92,4 +92,23 @@ class MatchEngineSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("an upstream row without a first id fails the match (rank-key contract)") {
+    val (osm, ups) = BenchPipeline.extract(graft.sources.Pages.synthesize(spark, 40L))
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.toString + messages(t.getCause)
+    // two rows without a first id would key ONE rank window, and all but one
+    // of them would vanish from the match; a NULL array did so silently, an
+    // empty one failed on ANSI's array index check
+    for (noIds <- Seq(array().cast("array<bigint>"), lit(null).cast("array<bigint>"))) {
+      val broken = ups.withColumn("ids",
+        when(col("id") % 2 === 0, noIds).otherwise(col("ids")))
+      assert(broken.filter(coalesce(size(col("ids")), lit(0)) <= 0).count() >= 2)
+      val e = intercept[Exception] {
+        MatchEngine.matchView(osm, broken, BenchPipeline.config()).collect()
+      }
+      assert(messages(e).contains("matchView rank-key contract"),
+        s"wanted the contract error, got: ${messages(e).take(300)}")
+    }
+  }
 }

@@ -213,6 +213,7 @@ class StreamingSpec extends AnyFunSuite {
     val state = Files.createTempDirectory("stream_fail_state").toString
     val store = new DeviationStore(spark, storeDir)
     Pages.synthesize(spark, 100L).write.mode("append").parquet(dir)
+    val callerConf = spark.conf.getAll
     // a plain file where the items sub-store's directory belongs: the items
     // merge fails on its write while the elements and changesets merges run
     val blocker = Paths.get(state, "items")
@@ -225,6 +226,7 @@ class StreamingSpec extends AnyFunSuite {
       s"the items merge's failure must surface: ${chain.map(_.getMessage)}")
     assert(!Files.exists(Paths.get(ckpt, "commits", "0")), "a failed batch must not commit")
     assert(store.views.isEmpty, "a failed batch must not sync deviations")
+    assert(spark.conf.getAll == callerConf, "the failed batch changed the caller's conf")
 
     // restart on the same checkpoint and state: batch 0 replays over the
     // elements the failed attempt already merged
@@ -236,6 +238,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(es.read("elements").count() ==
       Pages.extractOsmElements(pages).select("type", "id").distinct().count(),
       "the replay must leave one element row per key")
+    assertConverged(store, state)
+    assert(spark.conf.getAll == callerConf, "the replay changed the caller's conf")
+  }
+
+  /** the sync store equals a batch recompute over the element state */
+  private def assertConverged(store: DeviationStore, state: String): Unit = {
+    val es = new graft.engine.ElementStore(spark, state)
     val cfg = graft.engine.BenchPipeline.config()
     val want = graft.engine.BenchPipeline.deviations(graft.engine.MatchEngine.matchView(
       graft.engine.BenchPipeline.filterOsm(es.read("elements")),
@@ -246,7 +255,58 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.count() > 0)
     assert(want.select(keep: _*).exceptAll(got).isEmpty &&
       got.exceptAll(want.select(keep: _*)).isEmpty,
-      "the replayed store must equal a batch recompute over the element state")
+      "the synced store must equal a batch recompute over the element state")
+  }
+
+  test("edit-sized sync batches run interpreted; batches above the gate keep codegen") {
+    import java.nio.file.Files
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = Files.createTempDirectory("stream_gate_pages").toString
+    val ckpt = Files.createTempDirectory("stream_gate_ckpt").toString
+    val state = Files.createTempDirectory("stream_gate_state").toString
+    val store = new DeviationStore(spark, Files.createTempDirectory("stream_gate_store").toString)
+    def sync(): Unit =
+      StreamingIngest.startDeviationSync(spark, dir, ckpt, store, state).awaitTermination()
+    Pages.synthesize(spark, 300L).write.mode("append").parquet(dir)
+    sync()
+    val callerConf = spark.conf.getAll
+    // edit `k`: 8 feature pages of new sites on the base's map, one file
+    def edit(k: Int): Unit = {
+      val fresh = Pages.synthesize(spark, 8L, siteOffset = 100000L + 1000L * k)
+        .filter(col("text").startsWith("OSM ") || col("text").startsWith("UPSTREAM "))
+      val rows = fresh.take(8)
+      assert(rows.length == 8)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), fresh.schema)
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+
+    edit(0)
+    val small = compiles(sync())
+    // what still compiles are executor-side classes Spark generates with no
+    // interpreted form (cached-relation column accessors, the partial
+    // aggregate's row joiner, the sink's own scan of the batch), each once
+    // per query: a stream start clones the session, and executors give each
+    // session a class loader, and so a codegen cache, of its own
+    assert(small <= 20, s"an 8-row edit batch compiled $small classes")
+    assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
+
+    // the same batch size above the gate: the file-compression factor scales
+    // the size the source's listing reports for the batch's files
+    edit(1)
+    spark.conf.set("spark.sql.sources.fileCompressionFactor", "1000000")
+    val large = try compiles(sync())
+      finally spark.conf.unset("spark.sql.sources.fileCompressionFactor")
+    assert(large > 5 * small,
+      s"a batch above the gate compiled $large classes, the edit batch $small")
+    assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
+      assert(!spark.conf.getAll.contains(k), s"the caller's conf holds $k"))
+    assertConverged(store, state)
   }
 
   test("flatMapGroupsWithState dedup: later copies suppressed across micro-batches") {
