@@ -67,8 +67,10 @@ class DeviationStore(spark: SparkSession, path: String) {
     }
   }
 
+  /** a local relation: its plan statistics say 0 bytes, not the unknown
+    * size of an RDD */
   private def empty: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** latest snapshot of ONE view (partition-pruned read). */
   def latestFor(view: String): DataFrame = latestVersionOf(view) match {

@@ -89,7 +89,17 @@ class ElementStore(spark: SparkSession, path: String,
    * frontier.
    */
   def merge(name: String, keyCols: Seq[String], batch: DataFrame,
-            recencyCol: Option[String] = None): Seq[Long] = {
+            recencyCol: Option[String] = None): Seq[Long] =
+    stage(name, keyCols, batch, recencyCol).commit()
+
+  /**
+   * The first half of `merge`: runs the jobs that read only the batch and
+   * the index buckets of its keys, and returns the merge with its dirty
+   * blocks known and not yet read, so a caller can size the rewrite before
+   * running it. Exactly one of `commit`/`abort` must follow.
+   */
+  def stage(name: String, keyCols: Seq[String], batch: DataFrame,
+            recencyCol: Option[String] = None): ElementStore.Staged = {
     // A micro-batch may carry several rows for one key (the same element
     // updated twice inside one AvailableNow batch): the left_anti below only
     // removes OLD rows, so an un-deduped batch would write duplicate key rows
@@ -113,7 +123,7 @@ class ElementStore(spark: SparkSession, path: String,
     // leave a parquet dir with only _SUCCESS, making exists() true while
     // read() fails on schema inference (ADVICE r2) — skip both writes and
     // leave the store uninitialized (or untouched).
-    if (touched.isEmpty) { b.unpersist(); return Nil }
+    if (touched.isEmpty) return new ElementStore.Staged(Nil, 0, () => (), () => b.unpersist())
     val batchBlocks = touched.map(_.getLong(0)).distinct.toSeq
     val buckets = touched.map(_.getInt(1)).distinct.toSeq
 
@@ -123,45 +133,59 @@ class ElementStore(spark: SparkSession, path: String,
     val idxNew = b.select(keys :+ col("cb") :+ bucketOf(keyCols).as("kb"): _*)
     // the touched buckets' index rows, read once for both the old-block
     // lookup and the index rewrite
-    val idxOld = if (first) None else Some(readParts(idxPath(name), "kb", buckets,
+    val idxSlice = if (first) None else Some(readParts(idxPath(name), "kb", buckets,
       StructType(keyCols.map(bd.schema(_)) :+ StructField("cb", LongType) :+
-        StructField("kb", IntegerType))).cache())
+        StructField("kb", IntegerType))))
+    val idxBytes = idxSlice.fold(BigInt(0))(ElementStore.bytesOf)
+    val idxOld = idxSlice.map(_.cache())
     val oldBlocks = idxOld.fold(Seq.empty[Long])(_.join(bKeys, keyCols, "left_semi")
       .select("cb").distinct().collect().map(_.getLong(0)).toSeq)
     val dirtyBlocks = (batchBlocks ++ oldBlocks).distinct
+    val oldData = if (first) None else Some(readParts(dataPath(name), "cb", dirtyBlocks, bd.schema))
 
-    // --- data merge: read ONLY dirty blocks, drop batch keys, add batch ---
-    val dataCols = b.columns.map(col)
-    val written = Observation()
-    val out =
-      if (first) b
-      else readParts(dataPath(name), "cb", dirtyBlocks, bd.schema)
+    def write(): Unit = {
+      // --- data merge: read ONLY dirty blocks, drop batch keys, add batch ---
+      val dataCols = b.columns.map(col)
+      val written = Observation()
+      val out = oldData.fold(b)(_
         .join(bKeys, keyCols, "left_anti")
         .select(dataCols: _*)
         .unionByName(b.select(dataCols: _*))
         // the blocks `out` holds, gathered in the write's own pass (after
         // it, `out` would re-read the files the write replaced)
-        .observe(written, collect_set(col("cb")).as("cbs"))
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cb").parquet(dataPath(name))
-    // a dirty block whose last row vanished is absent from `out` and thus not
-    // overwritten — clear its directory explicitly (Iceberg MERGE would)
-    if (!first) {
-      val kept = written.get("cbs").asInstanceOf[Iterable[Long]].toSet
-      dirtyBlocks.filterNot(kept).foreach(cb => MatchStore.deleteRecursively(
-        Paths.get(dataPath(name), s"cb=$cb")))
+        .observe(written, collect_set(col("cb")).as("cbs")))
+      out.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cb").parquet(dataPath(name))
+      // a dirty block whose last row vanished is absent from `out` and thus
+      // not overwritten — clear its directory explicitly (Iceberg MERGE would)
+      if (!first) {
+        val kept = written.get("cbs").asInstanceOf[Iterable[Long]].toSet
+        dirtyBlocks.filterNot(kept).foreach(cb => MatchStore.deleteRecursively(
+          Paths.get(dataPath(name), s"cb=$cb")))
+      }
+
+      // --- index merge: same pattern over the narrow (key -> cb) table ---
+      val idxOut = idxOld.fold(idxNew)(_.join(bKeys, keyCols, "left_anti")
+        .select(idxNew.columns.map(col): _*).unionByName(idxNew))
+      idxOut.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("kb").parquet(idxPath(name))
     }
+    new ElementStore.Staged(dirtyBlocks, oldData.fold(BigInt(0))(ElementStore.bytesOf) + idxBytes,
+      () => write(), () => { idxOld.foreach(_.unpersist()); b.unpersist() })
+  }
 
-    // --- index merge: same pattern over the narrow (key -> cb) table ---
-    val idxOut = idxOld.fold(idxNew)(_.join(bKeys, keyCols, "left_anti")
-      .select(idxNew.columns.map(col): _*).unionByName(idxNew))
-    idxOut.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb").parquet(idxPath(name))
-
-    idxOld.foreach(_.unpersist()); b.unpersist()
-    dirtyBlocks
+  /** bytes of sub-store `name`'s key-index files: at most `idxBuckets`
+    * directories, walked without a job */
+  def indexBytes(name: String): Long = {
+    val root = Paths.get(idxPath(name))
+    if (!Files.exists(root)) 0L
+    else {
+      val files = Files.walk(root)
+      try files.filter(_.toString.endsWith(".parquet")).mapToLong(Files.size(_)).sum()
+      finally files.close()
+    }
   }
 
   /** Crash-recovery: a failure between merge's data write and index write
@@ -181,4 +205,22 @@ class ElementStore(spark: SparkSession, path: String,
         .write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(ip)
     }
   }
+}
+
+object ElementStore {
+  /** A merge whose dirty blocks are known and not yet rewritten (see
+    * `ElementStore.stage`). `bytes` is what `commit` reads of the store:
+    * the dirty blocks' data and the touched index buckets. */
+  final class Staged private[ElementStore] (val dirtyBlocks: Seq[Long], val bytes: BigInt,
+                                            write: () => Unit, release: () => Unit) {
+    /** rewrites the dirty blocks and the touched index buckets; returns the
+      * dirty blocks */
+    def commit(): Seq[Long] = try { write(); dirtyBlocks } finally release()
+    /** drops what `stage` cached, writing nothing */
+    def abort(): Unit = release()
+  }
+
+  /** the bytes a frame reads, from its plan's statistics (for a file scan,
+    * the sizes its listing found), without a job */
+  def bytesOf(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import scala.util.{Failure, Success, Try}
+import scala.util.{Failure, Try}
 
 /**
  * Structured-Streaming front end (SURVEY.md §2.10): the reference emulates
@@ -162,19 +162,32 @@ object StreamingIngest {
    * `checkpointDir`; replays are idempotent because both merges are keyed
    * upserts.
    *
-   * Codegen gate: a batch whose input files hold less than
-   * `InterpretedBelowBytes` (the batch plan's `sizeInBytes`, from the
-   * source's own file listing) runs with whole-stage codegen off and
-   * interpreted expressions. Compiling costs a fixed price per batch while
-   * interpreting costs per row: with codegen every 8-site edit op of the
-   * `sync_edits` benchmark compiled 236 classes with Janino again (1.9–3.4 s
-   * of a 3.9–6.8 s op on 4 vCPUs), interpreted it compiles 29.
-   * The crossover, measured as a first sync of n sites into a fresh store
-   * on 4 vCPUs (3 interleaved pairs, interpreted / codegen): 0.18 MB of
-   * pages 3.4–5.3 / 4.8–6.7 s, 0.62 MB 5.4–6.7 / 6.2–7.0 s, 1.2 MB
-   * 7.5–8.3 / 7.6–8.9 s, 2.4 MB 10.4–12.9 / 9.8–11.8 s, 9.5 MB 37.6 / 25.5 s.
+   * Codegen gate: compiling costs a fixed price per query, interpreting a
+   * price per row, so each of a batch's three phases runs with whole-stage
+   * codegen off and interpreted expressions when the bytes it reads are
+   * under `InterpretedBelowBytes`, and with codegen otherwise. The bytes are
+   * taken before the phase's first job, from plan statistics (a file scan's
+   * are the sizes its listing found) and directory sizes:
+   *  1. finding the dirty blocks reads the batch's files and, bounded by
+   *     their whole size, the key indexes;
+   *  2. rewriting the dirty blocks reads the batch and those blocks' data
+   *     and index buckets (`ElementStore.Staged.bytes`);
+   *  3. match, deviations and the deviation-store merge read the frontier's
+   *     elements and items and the view's snapshot.
+   * An 8-site edit op of the `sync_edits` benchmark (a 500-site base) runs
+   * all three interpreted and compiles 29 classes with Janino instead of
+   * 236. An 8-site edit into a 20k-site base at the same density runs 1
+   * and 2 interpreted and 3, 1.9–3.9 MB, with codegen, and takes as long as
+   * with codegen throughout; keyed on the batch's files alone, all three
+   * ran interpreted and the median op took 18% longer (CHANGES.md). The
+   * crossover, measured as a first sync of n sites into a fresh store on
+   * 4 vCPUs (3 interleaved pairs, interpreted / codegen): 0.18 MB of pages
+   * 3.4–5.3 / 4.8–6.7 s, 0.62 MB 5.4–6.7 / 6.2–7.0 s, 1.2 MB 7.5–8.3 /
+   * 7.6–8.9 s, 2.4 MB 10.4–12.9 / 9.8–11.8 s, 9.5 MB 37.6 / 25.5 s. No
+   * benchmark workload runs a phase above the gate; that side rests on
+   * this sweep and the 20k-site edits.
    * The mode is set on the stream's own session (a clone of `spark`) for
-   * the batch and restored after it; every Dataset of the batch is built
+   * the phase and restored after it; every Dataset of the batch is built
    * from that session, and `spark`'s conf is never touched.
    */
   def startDeviationSync(spark: SparkSession, pagesDir: String, checkpointDir: String,
@@ -194,21 +207,17 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the codegen gate (see above), taken before the batch's first job
         val session = batch.sparkSession
-        val small = batch.queryExecution.optimizedPlan.stats.sizeInBytes < InterpretedBelowBytes
-        withConf(session, if (small) NoCodegen else Nil) {
-          syncBatch(session, batch, new graft.engine.ElementStore(session, state),
-            store.withSession(session))
-        }
+        syncBatch(session, batch, new graft.engine.ElementStore(session, state),
+          store.withSession(session))
       }
       .start()
   }
 
-  /** Input size (bytes of the micro-batch's files) below which
-    * `startDeviationSync` runs a batch interpreted: just under the measured
-    * crossover of ~1.2 MB, see its scaladoc. */
-  private val InterpretedBelowBytes: Long = 1L << 20
+  /** Bytes a phase of a sync batch reads below which `startDeviationSync`
+    * runs the phase interpreted: just under the measured crossover of
+    * ~1.2 MB, see its scaladoc. */
+  private[streaming] val InterpretedBelowBytes: Long = 1L << 20
 
   /** session confs that run a query without generated code: no whole-stage
     * codegen, and interpreted projections, predicates and orderings */
@@ -216,8 +225,10 @@ object StreamingIngest {
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
 
-  /** runs `body` with `kvs` set on `session`, then restores what was there */
-  private def withConf[T](session: SparkSession, kvs: Seq[(String, String)])(body: => T): T = {
+  /** runs `body` on `session` interpreted when it reads fewer than
+    * `InterpretedBelowBytes`, then restores what `session` held */
+  private def sized[T](session: SparkSession, bytes: BigInt)(body: => T): T = {
+    val kvs = if (bytes < InterpretedBelowBytes) NoCodegen else Nil
     val set = session.conf.getAll
     val before = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => session.conf.set(k, v) }
@@ -227,67 +238,89 @@ object StreamingIngest {
     }
   }
 
-  /** one micro-batch of `startDeviationSync`, every Dataset built from `session` */
+  /** one micro-batch of `startDeviationSync`, every Dataset built from
+    * `session`, each phase run in the mode its own reads call for */
   private def syncBatch(session: SparkSession, batch: DataFrame,
                         es: graft.engine.ElementStore,
                         store: graft.engine.DeviationStore): Unit = {
     import graft.engine.{BenchPipeline, MatchEngine}
+    import graft.engine.ElementStore.bytesOf
     import graft.functions.GeoFunctions.stCentroid
     import graft.sources.Pages
-    val b = batch.cache()
-    val dirty = try concurrently(session, Seq(
-      () => es.merge("elements", Seq("type", "id"), Pages.extractOsmElements(b)),
-      () => es.merge("items", Seq("dataset_id", "original_id"),
-        Pages.extractUpstreamItems(b)),
-      // changesets: keyed MERGE only, no downstream recompute — ingested
-      // but unused, like the reference (04-osm-base.sql:43-49). Empty in
-      // batches without changeset pages (merge skips empty batches).
-      () => { es.merge("changesets", Seq("id"), Pages.extractChangesets(b),
-        recencyCol = Some("created_at")); Nil }
-    )).flatten.distinct finally b.unpersist()
-    // no per-batch caching: a cached candidate set would leak across
-    // micro-batches (matchView unpersists nothing); no checkpoint either:
-    // its blocking localCheckpoint job would run every micro-batch
-    val cfg = BenchPipeline.config()
-      .copy(cacheCandidates = false, checkpointCandidates = false)
-    def view(blocks: Option[Seq[Long]]) =
-      BenchPipeline.deviations(MatchEngine.matchView(
-        BenchPipeline.filterOsm(es.read("elements", blocks)),
-        BenchPipeline.projectUps(es.read("items", blocks)), cfg))
-    if (dirty.size > 256) {
-      // bulk load: the frontier is most of the map — a scoped plan with
-      // thousands of isin literals costs more than one full recompute
-      store.sync("bench_pois", view(None))
-    } else if (dirty.nonEmpty) {
-      // scope = 1-ring around dirty blocks (covers every feature a dirty
-      // feature can match); inputs read one ring wider so every scoped
-      // row sees ALL its potential partners
-      val scopeBlocks = es.ring(dirty)
-      val readBlocks = es.ring(scopeBlocks)
-      val blockOfCenter = es.blockCol(
-        stCentroid(col("center")).getField("_1"),
-        stCentroid(col("center")).getField("_2"))
-      val inScope = blockOfCenter.isin(scopeBlocks: _*)
-      store.syncScoped("bench_pois",
-        view(Some(readBlocks)).filter(inScope), scope = Some(inScope))
+    val input = bytesOf(batch)
+    // 1. each sub-store's dirty blocks: reads the batch and key-index buckets
+    val staged = sized(session,
+        input + Seq("elements", "items", "changesets").map(es.indexBytes).sum) {
+      val b = batch.cache()
+      try concurrently(session, Seq(
+        () => es.stage("elements", Seq("type", "id"), Pages.extractOsmElements(b)),
+        () => es.stage("items", Seq("dataset_id", "original_id"),
+          Pages.extractUpstreamItems(b)),
+        // changesets: keyed MERGE only, no downstream recompute — ingested
+        // but unused, like the reference (04-osm-base.sql:43-49). Empty in
+        // batches without changeset pages (an empty stage writes nothing).
+        () => es.stage("changesets", Seq("id"), Pages.extractChangesets(b),
+          recencyCol = Some("created_at"))
+      ), (s: graft.engine.ElementStore.Staged) => s.abort())
+      finally b.unpersist()
+    }
+    // 2. the rewrite of those blocks: reads the batch and the dirty blocks;
+    // the frontier is the elements' and items' dirty blocks
+    val dirty = sized(session, input + staged.map(_.bytes).sum) {
+      concurrently(session, staged.map(s => () => s.commit()))
+    }.take(2).flatten.distinct
+    if (dirty.isEmpty) return
+    // 3. match and deviations over the frontier, merged into the deviation
+    // store: reads the frontier's elements and items and the view's snapshot.
+    // A bulk load's frontier is most of the map — a scoped plan with
+    // thousands of isin literals costs more than one full recompute. Else
+    // scope = 1-ring around dirty blocks (covers every feature a dirty
+    // feature can match); inputs read one ring wider so every scoped row
+    // sees ALL its potential partners.
+    val scopeBlocks = if (dirty.size > 256) None else Some(es.ring(dirty))
+    val readBlocks = scopeBlocks.map(es.ring)
+    val elements = es.read("elements", readBlocks)
+    val items = es.read("items", readBlocks)
+    sized(session, bytesOf(elements) + bytesOf(items) +
+        bytesOf(store.latestFor("bench_pois"))) {
+      // no per-batch caching: a cached candidate set would leak across
+      // micro-batches (matchView unpersists nothing); no checkpoint either:
+      // its blocking localCheckpoint job would run every micro-batch
+      val cfg = BenchPipeline.config()
+        .copy(cacheCandidates = false, checkpointCandidates = false)
+      val view = BenchPipeline.deviations(MatchEngine.matchView(
+        BenchPipeline.filterOsm(elements), BenchPipeline.projectUps(items), cfg))
+      scopeBlocks match {
+        case None => store.sync("bench_pois", view)
+        case Some(bs) =>
+          val inScope = es.blockCol(
+            stCentroid(col("center")).getField("_1"),
+            stCentroid(col("center")).getField("_2")).isin(bs: _*)
+          store.syncScoped("bench_pois", view.filter(inScope), scope = Some(inScope))
+      }
     }
   }
 
   /** Runs `tasks` on threads of their own that carry the caller's Spark
     * local properties (job group, scheduler pool, execution id) and active
     * session, as Spark's own broadcasts do, so a stream's cancellation
-    * reaches their jobs. Waits for every task, then rethrows the first
-    * failure in `tasks` order. */
-  private def concurrently[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] = {
+    * reaches their jobs. Waits for every task; when one failed, hands the
+    * others' results to `release` and rethrows the first failure in `tasks`
+    * order. */
+  private def concurrently[T](spark: SparkSession, tasks: Seq[() => T],
+                              release: T => Unit = (_: T) => ()): Seq[T] = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    try tasks.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(t()))
+    val results = try tasks.map(t => SQLExecution.withThreadLocalCaptured(session, pool)(t()))
       .map(f => Try(f.get()))
-      .map {
-        case Success(v) => v
-        case Failure(e: java.util.concurrent.ExecutionException) => throw e.getCause
-        case Failure(e) => throw e
-      }
-    finally pool.shutdown()
+      finally pool.shutdown()
+    results.collectFirst { case Failure(e) =>
+      results.foreach(_.foreach(release))
+      throw (e match {
+        case x: java.util.concurrent.ExecutionException => x.getCause
+        case other => other
+      })
+    }
+    results.map(_.get)
   }
 }

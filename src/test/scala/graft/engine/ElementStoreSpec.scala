@@ -48,6 +48,36 @@ class ElementStoreSpec extends AnyFunSuite {
     assert(es.read("elements", Some(Seq(b1))).count() == 1)
   }
 
+  test("a staged merge sizes its rewrite before reading a dirty block; abort writes nothing") {
+    import java.nio.file.{Files, Path, Paths}
+    val dir = Files.createTempDirectory("estore_stage").toString
+    val es = new ElementStore(spark, dir, blockMeters = 10000.0)
+    es.merge("elements", Seq("type", "id"),
+      df(("n", 1L, 5000.0, 5000.0), ("n", 2L, 105000.0, 105000.0)))
+    def parquetBytes(p: Path): Long = {
+      val files = Files.walk(p)
+      try files.filter(_.toString.endsWith(".parquet")).mapToLong(Files.size(_)).sum()
+      finally files.close()
+    }
+    def cxOf2 = es.read("elements").filter(col("id") === 2).select("cx").collect().map(_.getDouble(0))
+    val oldBlock = es.read("elements").filter(col("id") === 2).select("cb").collect()(0).getLong(0)
+    val move = df(("n", 2L, 205000.0, 205000.0))
+
+    // a move of feature 2: its old block and a block never written are
+    // dirty; the rewrite reads the old block and the key's index bucket
+    val staged = es.stage("elements", Seq("type", "id"), move)
+    assert(staged.dirtyBlocks.size == 2 && staged.dirtyBlocks.contains(oldBlock))
+    val data = parquetBytes(Paths.get(dir, "elements", "data", s"cb=$oldBlock"))
+    val idx = parquetBytes(Paths.get(dir, "elements", "idx"))
+    assert(staged.bytes > data && staged.bytes <= data + idx, s"${staged.bytes} vs $data + $idx")
+    staged.abort()
+    assert(cxOf2.toSeq == Seq(105000.0), "an aborted merge must write nothing")
+
+    val again = es.stage("elements", Seq("type", "id"), move)
+    assert(again.commit().toSet == staged.dirtyBlocks.toSet)
+    assert(cxOf2.toSeq == Seq(205000.0))
+  }
+
   test("a missing key index is rebuilt from data (crash between data and index writes)") {
     val dir = java.nio.file.Files.createTempDirectory("estore_rebuild").toString
     val es = new ElementStore(spark, dir, blockMeters = 10000.0)

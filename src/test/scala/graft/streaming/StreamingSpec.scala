@@ -259,7 +259,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("edit-sized sync batches run interpreted; batches above the gate keep codegen") {
-    import java.nio.file.Files
+    import java.nio.file.{Files, Paths}
     import org.apache.spark.metrics.source.CodegenMetrics
     val dir = Files.createTempDirectory("stream_gate_pages").toString
     val ckpt = Files.createTempDirectory("stream_gate_ckpt").toString
@@ -270,19 +270,33 @@ class StreamingSpec extends AnyFunSuite {
     Pages.synthesize(spark, 300L).write.mode("append").parquet(dir)
     sync()
     val callerConf = spark.conf.getAll
-    // edit `k`: 8 feature pages of new sites on the base's map, one file
-    def edit(k: Int): Unit = {
+    def pageBytes(): Long = {
+      val files = Files.walk(Paths.get(dir))
+      try files.filter(_.toString.endsWith(".parquet")).mapToLong(Files.size(_)).sum()
+      finally files.close()
+    }
+    // edit `k`: 8 feature pages of new sites on the base's map, one file;
+    // returns the file's bytes
+    def edit(k: Int): Long = {
       val fresh = Pages.synthesize(spark, 8L, siteOffset = 100000L + 1000L * k)
         .filter(col("text").startsWith("OSM ") || col("text").startsWith("UPSTREAM "))
       val rows = fresh.take(8)
       assert(rows.length == 8)
+      val before = pageBytes()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), fresh.schema)
         .coalesce(1).write.mode("append").parquet(dir)
+      pageBytes() - before
     }
     def compiles(body: => Unit): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       body
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // the file-compression factor scales the size a file scan's statistics
+    // report: the source's listing of the batch's files, and the store reads
+    def syncScaled(factor: Long): Long = {
+      spark.conf.set("spark.sql.sources.fileCompressionFactor", factor.toString)
+      try compiles(sync()) finally spark.conf.unset("spark.sql.sources.fileCompressionFactor")
     }
 
     edit(0)
@@ -295,12 +309,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(small <= 20, s"an 8-row edit batch compiled $small classes")
     assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
 
-    // the same batch size above the gate: the file-compression factor scales
-    // the size the source's listing reports for the batch's files
-    edit(1)
-    spark.conf.set("spark.sql.sources.fileCompressionFactor", "1000000")
-    val large = try compiles(sync())
-      finally spark.conf.unset("spark.sql.sources.fileCompressionFactor")
+    // an edit batch whose files stay under the gate, into a store whose
+    // frontier reads are over it: the deviation-store snapshot alone, which
+    // the frontier phase reads, is scaled past the gate
+    val factor = StreamingIngest.InterpretedBelowBytes / 2 / edit(1)
+    val snapshot = graft.engine.ElementStore.bytesOf(store.latestFor("bench_pois"))
+    assert(snapshot * factor > StreamingIngest.InterpretedBelowBytes)
+    val frontier = syncScaled(factor)
+    assert(frontier > 5 * small,
+      s"an edit into a store above the gate compiled $frontier classes, one below it $small")
+    assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
+
+    // a batch whose own files are above the gate
+    edit(2)
+    val large = syncScaled(1000000L)
     assert(large > 5 * small,
       s"a batch above the gate compiled $large classes, the edit batch $small")
     assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
