@@ -419,8 +419,11 @@ object QueriesEmbOracle {
        |FROM b LEFT JOIN (SELECT * FROM best WHERE rn = 1) w ON w.id = b.k""".stripMargin
 
   /** shared SQ scaffold: per-dim min/max stats + per-row int8 codes — the
-    * ROUND((v−mn)·255/rng) expression is the udf's exact shape (one IEEE
-    * divide, half-away-from-zero round on a non-negative operand). */
+    * ROUND((v−mn)·255/rng) expression is the udf's shape (one IEEE divide,
+    * half-away-from-zero round on a non-negative operand), but the udf also
+    * clamps the code to [0,255] and this SQL does not: parity holds because
+    * every oracle query here encodes only the corpus the stats came from,
+    * whose values lie inside [mn, mx]. */
   private val sqScaffold: String = {
     val statCols = (0 until 16)
       .map(i => s"MIN(v$i) AS mn$i, MAX(v$i) AS mx$i").mkString(",\n    ")

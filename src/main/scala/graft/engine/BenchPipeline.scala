@@ -26,6 +26,14 @@ object BenchPipeline {
     possiblyClosed = Some(("POI möjligen stängd", "Enligt källan finns det ingen POI här")),
     missingTags = ("POI saknar taggar", "Följande taggar saknas på POI:n här"))
 
+  // cacheCandidates stays at its default OFF (r3): caching the refined
+  // candidates halves the cell-join work (the anti leg reuses it) but
+  // only makes sense when the candidate set fits executor memory — at
+  // the 10^12-row design point it cannot, and even locally the cached
+  // blocks were the bench JVM's dominant GC pressure (probed: 1-60 s of
+  // collection inside measured runs; without the cache GC drops to
+  // ~1 s). The anti leg recomputing its input is the same trade the
+  // reference makes by re-reading mv_match from disk.
   def config(saltThreshold: Long = Long.MaxValue, saltFactor: Int = 16): MatchConfig =
     MatchConfig(
       matchSpec = spec,
@@ -46,21 +54,7 @@ object BenchPipeline {
       cellSize = spec.maxDistance,
       antiLeg = true,
       saltThreshold = saltThreshold,
-      saltFactor = saltFactor,
-      // DEFAULT OFF (r3): caching the refined candidates halves the
-      // cell-join work (the anti leg reuses it) but only makes sense when
-      // the candidate set fits executor memory — at the 10^12-row design
-      // point it cannot, and even locally the cached blocks were the bench
-      // JVM's dominant GC pressure (probed: 1-60 s of collection inside
-      // measured runs; without the cache GC drops to ~1 s and 2-core runs
-      // repeat within 8%). The anti leg recomputing its input is the same
-      // trade the reference makes by re-reading mv_match from disk.
-      cacheCandidates =
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_CANDIDATES", "false").toBoolean,
-      // r6 A/B switch: eager narrow localCheckpoint of the refined
-      // candidates (one cell-join execution for both legs, no fill race)
-      checkpointCandidates =
-        sys.env.getOrElse("SPARK_GRAFT_CKPT_CANDIDATES", "false").toBoolean)
+      saltFactor = saltFactor)
 
   /** dataset-level filter/projection over EXTRACTED features — shared by the
     * batch pipeline and the incremental streaming path (which reads the same

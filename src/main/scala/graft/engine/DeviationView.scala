@@ -88,26 +88,11 @@ object DeviationView {
           col("osm_element_id"), col("osm_element_type"))
         val exploded = matchDf.select(col("*"),
           posexplode_outer(col("upstream_tags")).as(Seq("alt_pos", "ups_tags")))
-        // min-diff pick: window by default, min_by aggregation behind the
-        // same flag as MatchEngine's rank (the A/B there showed the window's
-        // one cheap sort beats paying a full-payload struct copy through the
-        // aggregation buffer; alternatives groups are tiny, so the min_by
-        // shuffle saving is negligible here anyway)
-        if (!sys.env.get("SPARK_GRAFT_RANK_MINBY").contains("true")) {
-          val w = Window.partitionBy(key: _*)
-            .orderBy(countTagKeys(tagDiff(col("osm_tags"), col("ups_tags"))).asc,
-              col("alt_pos").asc)
-          exploded.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn", "alt_pos")
-        } else {
-          val ord = struct(
-            countTagKeys(tagDiff(col("osm_tags"), col("ups_tags"))), col("alt_pos"))
-          val payload = exploded.columns.filter(_ != "alt_pos").map(col)
-          exploded
-            .groupBy(key.zipWithIndex.map { case (k, i) => k.as(s"__k$i") }: _*)
-            .agg(min_by(struct(payload: _*), ord).as("__best"))
-            .select(col("__best.*"))
-        }
+        val w = Window.partitionBy(key: _*)
+          .orderBy(countTagKeys(tagDiff(col("osm_tags"), col("ups_tags"))).asc,
+            col("alt_pos").asc)
+        exploded.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn", "alt_pos")
       }
 
     val withDiff = picked

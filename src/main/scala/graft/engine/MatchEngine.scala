@@ -72,17 +72,7 @@ object MatchEngine {
         * ONE cell-join execution (Catalyst does not reuse the exchange
         * across the two consumers) — the in-memory analog of the
         * reference's materialized mv_match_*. */
-      cacheCandidates: Boolean = false,
-      /** r6 alternative to cacheCandidates: EAGERLY localCheckpoint the
-        * narrow post-refinement projection (candCols only — no hoist
-        * columns) so the candidate join runs exactly once and both legs
-        * read the materialized blocks. Unlike the lazy cache this cannot
-        * race across the concurrently-started consumer stages (the fill is
-        * a blocking job), and unlike matched0 it stores only the output
-        * columns. The disk-backed analog of the reference's mv_match_*.
-        * Applied only when the anti leg would reuse matched0 anyway (same
-        * spec/keys, no muni guard); other configs fall through unchanged. */
-      checkpointCandidates: Boolean = false)
+      cacheCandidates: Boolean = false)
 
   /**
    * Point-in-polygon municipality stamping (J3) — broadcast a [[MuniIndex]]
@@ -226,8 +216,8 @@ object MatchEngine {
       .withColumn("score", scoreHoisted(spec, col("dist")))
     // NOTE: when enabled, this cache lives until the session ends (the legs
     // that consume it are returned lazily, so there is no safe unpersist
-    // point inside this function) — cacheCandidates is a per-session probe
-    // switch (default OFF, see BenchPipeline.config), not a production mode
+    // point inside this function) — no production caller enables it
+    // (default OFF, see BenchPipeline.config)
     val matched0 = if (cfg.cacheCandidates) matched00.cache() else matched00
 
     val matched =
@@ -246,18 +236,7 @@ object MatchEngine {
       col("p_ids"), col(s"p_$upsTagsCol"), col("p_geometry"),
       col("b_id"), col("b_type"), col("b_tags"), col("b_geom"),
       col("dist"), col("score")) ++ cfg.carryUps.map(c => col(s"p_$c"))
-    // see MatchConfig.checkpointCandidates — when the anti leg would
-    // consume matched0 verbatim, one eager narrow materialization serves
-    // both legs (guard-free configs only: matched == matched0 there, so
-    // the projection is leg-identical by construction)
-    val canShareNarrow = cfg.checkpointCandidates &&
-      !cfg.muniGuardWhere && !cfg.muniGuardCondition &&
-      cfg.antiMatchSpec.isEmpty &&
-      cfg.antiExtraJoinKeys.getOrElse(cfg.extraJoinKeys) == cfg.extraJoinKeys
-    val narrowCkpt: Option[DataFrame] =
-      if (canShareNarrow) Some(matched.select(candCols: _*).localCheckpoint(true))
-      else None
-    val ranked0 = narrowCkpt.getOrElse(matched.select(candCols: _*))
+    val ranked0 = matched.select(candCols: _*)
     val ranked =
       if (cfg.muniGuardWhere) ranked0
       else ranked0.unionByName(ups.select(Seq(
@@ -282,36 +261,19 @@ object MatchEngine {
     // this by construction (array(id) / sorted collect_list of ≥1 id); a
     // NULL key fails the query in-plan (the BM25 overflow guard's
     // raise_error pattern — no extra action).
-    // rank-1: sort window by default; SPARK_GRAFT_RANK_MINBY=true switches
-    // to a min_by aggregation over the same unique total order (score,
-    // b_type, b_id). The aggregation partial-combines map-side (one
-    // candidate per group per mapper on the shuffle — the mitigation for
-    // extreme per-key candidate skew), but it pays a per-row copy of the
-    // full payload struct through the SortAggregate buffer: A/B at 1.5M
-    // sites measured window 36.9 s vs min_by 53.5 s min-of-3 at 8 cores
-    // (min_by marginally ahead at 2 cores, 111 vs 117 s). Groups here are
-    // per-upstream-key and cell-bounded, so the skew min_by protects
-    // against is already capped by the candidate join — the window's
-    // single cheap sort wins. Both forms are oracle-verified identical.
-    val rankViaWindow = !sys.env.get("SPARK_GRAFT_RANK_MINBY").contains("true")
+    // rank-1 is a sort window over the unique total order (score, b_type,
+    // b_id); groups are per upstream key and cell-bounded, so the candidate
+    // join already caps per-key skew (a min_by aggregation lost its A/B to
+    // the window's one sort: BASELINE.md "Rank-form A/B").
     val firstId = get(col("p_ids"), lit(0))
     val keyed = ranked.withColumn("__pk", when(firstId.isNotNull, firstId)
       .otherwise(raise_error(concat(lit("matchView rank-key contract: an upstream " +
         "row's ids array is null, empty or starts with null (ids = "),
         coalesce(col("p_ids").cast("string"), lit("NULL")), lit(")")))))
-    val ordKey = struct(col("score"), col("b_type"), col("b_id"))
-    val top1 =
-      if (rankViaWindow) {
-        val w = Window.partitionBy(col("__pk"))
-          .orderBy(col("score"), col("b_type"), col("b_id"))
-        keyed.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-      } else {
-        val payload = ranked.columns.map(col)
-        keyed.groupBy(col("__pk"))
-          .agg(min_by(struct(payload: _*), ordKey).as("__best"))
-          .select(col("__best.*"))
-      }
+    val w = Window.partitionBy(col("__pk"))
+      .orderBy(col("score"), col("b_type"), col("b_id"))
+    val top1 = keyed.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
     val leg1 = top1
       .select(Seq(
         col("p_ids").as("upstream_item_ids"),
@@ -334,8 +296,7 @@ object MatchEngine {
       val antiSpec = cfg.antiMatchSpec.getOrElse(spec)
       val antiKeys = cfg.antiExtraJoinKeys.getOrElse(cfg.extraJoinKeys)
       val antiMatched =
-        if (narrowCkpt.isDefined) narrowCkpt.get
-        else if (cfg.antiMatchSpec.isEmpty && antiKeys == cfg.extraJoinKeys) matched0
+        if (cfg.antiMatchSpec.isEmpty && antiKeys == cfg.extraJoinKeys) matched0
         else SpatialJoin.dwithinCandidates(
             build = withHoistA(osm, antiSpec), probe = withHoistB(ups, antiSpec, tagsBRaw),
             buildGeom = "geom", probeGeom = "geometry",

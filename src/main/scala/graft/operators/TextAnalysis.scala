@@ -531,33 +531,40 @@ object TextAnalysis {
       .join(dfreq, Seq("word"))
       .join(dlen, Seq("doc_id"))
       .crossJoin(broadcast(totals))
-      // loud overflow enforcement (r6, ADVICE r5): the scaladoc bound
-      // tf·A < (2⁶³−1)/(10⁶·22) was documented but unchecked — beyond it
-      // the fixed-point numerator wraps and ranks silently corrupt. The
-      // guard is IN-PLAN (q_agg_hll's raise_error pattern — no extra
-      // action) and division-form so the check itself cannot wrap:
-      // tfc ≤ bound div a_num ⇒ tfc·a_num ≤ bound. The denominator term
-      // 9·len·n_docs gets the analogous bound. Zero effect on any corpus
-      // inside the bound (the otherwise-branch is the identical
-      // expression); a violating corpus now fails loudly naming the fix
-      // (divide A out of the rationalization — ratio-invariant — or shard).
-      .withColumn("contrib",
-        when(expr("tfc > 419244183493L div a_num or " +
-                  "len > 1024819115206086200L div n_docs"),
-          expr("raise_error(concat('bm25TopK fixed-point overflow: tf*A or " +
-            "len*N beyond the 2^63 bound (tfc=', cast(tfc as string), " +
-            "', a_num=', cast(a_num as string), ', len=', cast(len as string), " +
-            "', n_docs=', cast(n_docs as string), '); divide a_num out of " +
-            "the rationalization or shard the corpus'))").cast("long"))
-        .otherwise(
-          expr("(1000 * (2*n_docs - 2*df + 1)) div (2*df + 1)") *
-            expr("(1000000 * 22 * tfc * a_num) div " +
-              "(10 * tfc * a_num + 3 * a_num + 9 * len * n_docs)")))
+      .withColumn("contrib", bm25Contrib)
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id").asc)
     scored.groupBy("query_id", "doc_id").agg(sum("contrib").as("score"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select("query_id", "doc_id", "score", "rank")
   }
+
+  /** one term's fixed-point BM25 contribution over the columns `tfc`,
+    * `df`, `len`, `n_docs` and `a_num` (see [[bm25TopK]]).
+    *
+    * Loud overflow enforcement (r6, ADVICE r5): beyond the scaladoc bound
+    * the fixed-point numerator or denominator wraps and ranks silently
+    * corrupt, so the guard is IN-PLAN (q_agg_hll's raise_error pattern — no
+    * extra action) and division-form so the check itself cannot wrap:
+    * tfc ≤ 419244183493 div a_num ⇒ 22·10⁶·tfc·a_num < 2⁶³. Both
+    * 10·tfc·a_num and 3·a_num are then bounded by that product, so the
+    * other denominator terms total at most 13·419244183493 =
+    * 5450174385409, and 9·len·n_docs gets what is left:
+    * len ≤ ((2⁶³−1 − 5450174385409) div 9) div n_docs. Zero effect on any
+    * corpus inside the bound (the otherwise-branch is the identical
+    * expression); a violating corpus fails loudly naming the fix (divide A
+    * out of the rationalization — ratio-invariant — or shard). */
+  private[operators] def bm25Contrib: Column =
+    when(expr("tfc > 419244183493L div a_num or " +
+              "len > 1024818509631154488L div n_docs"),
+      expr("raise_error(concat('bm25TopK fixed-point overflow: tf*A or " +
+        "len*N beyond the 2^63 bound (tfc=', cast(tfc as string), " +
+        "', a_num=', cast(a_num as string), ', len=', cast(len as string), " +
+        "', n_docs=', cast(n_docs as string), '); divide a_num out of " +
+        "the rationalization or shard the corpus'))").cast("long"))
+    .otherwise(
+      expr("(1000 * (2*n_docs - 2*df + 1)) div (2*df + 1)") *
+        expr("(1000000 * 22 * tfc * a_num) div " +
+          "(10 * tfc * a_num + 3 * a_num + 9 * len * n_docs)"))
 
   /**
    * Reciprocal-rank fusion (Cormack et al. 2009) of two per-query rankings —

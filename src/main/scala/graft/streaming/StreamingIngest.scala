@@ -148,8 +148,14 @@ object StreamingIngest {
    *  4. merges via DeviationStore.syncScoped, so rows outside the frontier
    *     are untouched.
    *
-   * Per-batch work is O(batch + dirty blocks), never O(history) — the r1
-   * version recomputed over all pages each micro-batch (VERDICT r1 #7).
+   * Per-batch work is not O(history) — the r1 version recomputed over all
+   * pages each micro-batch (VERDICT r1 #7) — but it is not O(edit) either:
+   * the frontier match reads `ring(ring(dirty))`, the 5×5 blocks around
+   * each dirty block, for a match that reaches 250 m, so an edit into a
+   * dense store reads most of the store; and `DeviationStore.syncScoped`
+   * commits the whole view as a new snapshot, which is O(view). Reading
+   * the frontier by match reach and rewriting only the touched rows is
+   * ROADMAP item 7.
    * The three sub-store merges (elements, items, changesets) are independent
    * and run concurrently; each reads only the partitions its rows touch, so
    * an edit batch costs a fixed number of Spark jobs per sub-store (see
@@ -283,13 +289,9 @@ object StreamingIngest {
     val items = es.read("items", readBlocks)
     sized(session, bytesOf(elements) + bytesOf(items) +
         bytesOf(store.latestFor("bench_pois"))) {
-      // no per-batch caching: a cached candidate set would leak across
-      // micro-batches (matchView unpersists nothing); no checkpoint either:
-      // its blocking localCheckpoint job would run every micro-batch
-      val cfg = BenchPipeline.config()
-        .copy(cacheCandidates = false, checkpointCandidates = false)
       val view = BenchPipeline.deviations(MatchEngine.matchView(
-        BenchPipeline.filterOsm(elements), BenchPipeline.projectUps(items), cfg))
+        BenchPipeline.filterOsm(elements), BenchPipeline.projectUps(items),
+        BenchPipeline.config()))
       scopeBlocks match {
         case None => store.sync("bench_pois", view)
         case Some(bs) =>

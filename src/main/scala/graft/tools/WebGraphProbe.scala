@@ -9,8 +9,8 @@ import graft.operators.{WebGraph, WebText}
   * nPages Common-Crawl-shaped pages with HASH-MIXED hosts (xxhash64 — an
   * arithmetic host id would make per-host link counts a trivial cycle),
   * then times each stage at each requested core count (sequential
-  * sessions, the ScalingProbe discipline — NEVER two timed Spark JVMs at
-  * once).
+  * sessions, as `Profile pipeline` runs its core list — NEVER two timed
+  * Spark JVMs at once).
   *
   * Measurement protocol (the headline min-of-3 lesson from VERDICT r3 #4,
   * re-learned here: a single-shot 8-core links_hostgraph read 98 s while

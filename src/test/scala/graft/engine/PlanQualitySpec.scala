@@ -66,9 +66,8 @@ class PlanQualitySpec extends AnyFunSuite {
     val joins = "(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)".r
       .findAllIn(tree).size
     assert(joins == 1, s"expected 1 candidate join, got $joins\n$tree")
-    // default rank form is the window (A/B showed it beats the min_by
-    // aggregation's per-row payload copy; SPARK_GRAFT_RANK_MINBY opts into
-    // the aggregation for extreme-skew deployments)
+    // the rank form is the window, one per fused candidate join (a min_by
+    // aggregation lost its A/B to the window: BASELINE.md "Rank-form A/B")
     val windows = "(?m)\\bWindow \\(".r.findAllIn(tree).size
     assert(windows == 1, s"expected 1 rank window, got $windows\n$tree")
   }

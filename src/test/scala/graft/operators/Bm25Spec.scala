@@ -56,10 +56,26 @@ class Bm25Spec extends AnyFunSuite {
     val e = intercept[Exception] {
       TextAnalysis.bm25TopK(big, "doc_id", "text", q, k = 1).collect()
     }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.toString + messages(t.getCause)
     assert(messages(e).contains("bm25TopK fixed-point overflow"),
       s"wanted the loud overflow error, got: ${messages(e).take(300)}")
+  }
+
+  private def messages(t: Throwable): String =
+    if (t == null) "" else t.toString + messages(t.getCause)
+
+  test("the len*N guard leaves headroom for the other denominator terms") {
+    // 10·tfc·a_num + 3·a_num reaches 13·419244183493 = 5450174385409, so
+    // 9·len·n_docs may only take what is left of 2^63-1. At the old bound
+    // len·n_docs = (2^63-1) div 9 with a_num = 3 the denominator wrapped
+    // past 2^63 with no guard firing.
+    def contrib(len: Long) = Seq((1L, 3L, len, 1L, 1L))
+      .toDF("tfc", "a_num", "len", "n_docs", "df")
+      .select(TextAnalysis.bm25Contrib.as("c"))
+    val e = intercept[Exception](contrib(1024819115206086200L).collect())
+    assert(messages(e).contains("bm25TopK fixed-point overflow"),
+      s"wanted the loud overflow error, got: ${messages(e).take(300)}")
+    // the tightened bound itself still scores, without wrapping
+    assert(contrib(1024818509631154488L).collect()(0).getLong(0) == 0L)
   }
 
   test("rrfFuse sums 10^6 div (60+rank) across legs, full-outer on misses") {
