@@ -26,14 +26,10 @@ object BenchPipeline {
     possiblyClosed = Some(("POI möjligen stängd", "Enligt källan finns det ingen POI här")),
     missingTags = ("POI saknar taggar", "Följande taggar saknas på POI:n här"))
 
-  // cacheCandidates stays at its default OFF (r3): caching the refined
-  // candidates halves the cell-join work (the anti leg reuses it) but
-  // only makes sense when the candidate set fits executor memory — at
-  // the 10^12-row design point it cannot, and even locally the cached
-  // blocks were the bench JVM's dominant GC pressure (probed: 1-60 s of
-  // collection inside measured runs; without the cache GC drops to
-  // ~1 s). The anti leg recomputing its input is the same trade the
-  // reference makes by re-reading mv_match from disk.
+  // cacheCandidates stays at its default OFF: both legs of matchView read
+  // ONE cell join's refined pairs, so a cache saves no join work, and
+  // cached candidate blocks were the bench JVM's dominant GC pressure
+  // (probed: 1-60 s of collection inside measured runs).
   def config(saltThreshold: Long = Long.MaxValue, saltFactor: Int = 16): MatchConfig =
     MatchConfig(
       matchSpec = spec,
@@ -187,8 +183,12 @@ object BenchPipeline {
     * `densityRefSites` forwards to [[Pages.synthesize]]'s constant-density
     * mode (the linear-in-corpus measurement of BASELINE.md §3f). */
   def pipelineCounts(spark: SparkSession, nSites: Long,
-                     densityRefSites: Option[Long] = None): (Long, Long) = {
-    import org.apache.spark.sql.functions._
+                     densityRefSites: Option[Long] = None): (Long, Long) =
+    countsOf(pipelineFrame(spark, nSites, densityRefSites))
+
+  /** the one-row frame whose collect is [[pipelineCounts]]' action */
+  def pipelineFrame(spark: SparkSession, nSites: Long,
+                    densityRefSites: Option[Long] = None): DataFrame = {
     val pages = Pages.synthesize(spark, nSites, densityRefSites = densityRefSites)
     val m = matchRows(pages)
     val all = DeviationView.deviations(m, DeviationConfig(
@@ -197,7 +197,12 @@ object BenchPipeline {
       // SAME predicate object the production view filters by — an inline
       // re-statement here could silently count a different population
       .withColumn("emitted", MissingOrDiffNonEmpty.pred.cast("long"))
-    val r = all.agg(count(lit(1)).as("m"), sum(col("emitted")).as("d")).collect()(0)
+    all.agg(count(lit(1)).as("m"), sum(col("emitted")).as("d"))
+  }
+
+  /** collects a [[pipelineFrame]]: (match rows, emitted deviation rows) */
+  def countsOf(frame: DataFrame): (Long, Long) = {
+    val r = frame.collect()(0)
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 }

@@ -208,13 +208,15 @@ class DeviationStore(spark: SparkSession, path: String) {
     (upserted, deletions.get("deleted").asInstanceOf[Long])
   }
 
-  /** prefix all columns and add a presence marker (for full-outer bookkeeping) */
+  /** prefix the schema's columns and add a presence marker (for
+    * full-outer bookkeeping), in one projection: the frame's columns in
+    * place, then the schema columns it lacks as typed nulls, then the marker */
   private def keyed(df: DataFrame, p: String): DataFrame = {
-    val base = schema.fieldNames.foldLeft(df) { (d, c) =>
-      if (d.columns.contains(c)) d.withColumnRenamed(c, p + c)
-      else d.withColumn(p + c, lit(null).cast(schema(c).dataType))
-    }
-    base.withColumn(s"${p}title_present", lit(true))
+    val missing = schema.fields.filterNot(f => df.columns.contains(f.name))
+    df.select(df.columns.toSeq.map(c =>
+        if (schema.fieldNames.contains(c)) df.col(c).as(p + c) else df.col(c)) ++
+      missing.map(f => lit(null).cast(f.dataType).as(p + f.name)) :+
+      lit(true).as(s"${p}title_present"): _*)
   }
 }
 

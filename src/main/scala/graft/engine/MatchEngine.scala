@@ -19,9 +19,11 @@ import graft.operators.SpatialJoin.DWithinSpec
  *   DISTINCT ON (ups.id) ORDER BY match_score(...) (J4 rank-1)
  *   UNION ALL unmatched-OSM anti leg               (J5)
  *
- * as a cell-bucketed candidate join + window rank + left_anti, all Catalyst-
- * planned. Determinism: the reference's DISTINCT ON is tie-unstable; we pin
- * the total order (score, osm type, osm id) — divergence only on exact ties.
+ * as ONE cell-bucketed candidate join whose refined pairs feed ONE window:
+ * rank-1 per upstream row for J4, "no match marker" per osm row for J5, all
+ * Catalyst-planned. Determinism: the reference's DISTINCT ON is tie-unstable;
+ * we pin the total order (score, osm type, osm id) — divergence only on exact
+ * ties.
  */
 object MatchEngine {
 
@@ -35,7 +37,7 @@ object MatchEngine {
     * @param muniGuardWhere replicates `WHERE osm.code = ups.code` placed
     *   AFTER the left join (12:28): null-extended rows are filtered, so
     *   upstream items only survive leg 1 when a same-municipality candidate
-    *   matched.
+    *   matched (and no upstream sentinel checks the rank-key contract).
     * @param muniGuardCondition replicates `ON match_condition(...) AND
     *   osm.code = ups.code` (36:35): the guard restricts candidates but the
     *   left extension survives (missing rows still emitted), and the anti
@@ -68,10 +70,9 @@ object MatchEngine {
       extraCandidateFilter: Option[Column] = None,
       saltThreshold: Long = Long.MaxValue,
       saltFactor: Int = 16,
-      /** persist the refined candidate set so leg 1 and the anti leg share
-        * ONE cell-join execution (Catalyst does not reuse the exchange
-        * across the two consumers) — the in-memory analog of the
-        * reference's materialized mv_match_*. */
+      /** persist the refined candidate set. Both legs already read it
+        * from ONE cell-join execution, so this only pays off for a caller
+        * that re-executes the returned frame. */
       cacheCandidates: Boolean = false)
 
   /**
@@ -105,19 +106,6 @@ object MatchEngine {
       municipalityCodeUdf(munis, closestFallback)(col(gc)))
   }
 
-  /**
-   * Build the match view.
-   *
-   * Inputs (caller pre-filters/projects, mirroring the views' CTEs):
-   *  - osm: (type, id, tags MAP, geom WKB, cx, cy, is_point [, muni_code])
-   *  - ups: (ids ARRAY<LONG>, tags MAP or tag_alts ARRAY<MAP>, geometry WKB,
-   *          cx, cy, is_point [, muni_code])
-   *
-   * Output (the mv_match_* schema, 12:23-29 + osm geom carried for tiles):
-   *   upstream_item_ids, upstream_tags (same type as input tags),
-   *   upstream_geom, osm_element_id, osm_element_type, osm_tags, osm_geom,
-   *   dist
-   */
   // ---- hoisted condition/score (r6, guide §1.2 "per-task work" + §2.3
   // "project before the exchange"): matchConditionCol/matchScoreCol evaluate
   // map_contains_key / split / lower on BOTH tag maps once per candidate
@@ -128,44 +116,32 @@ object MatchEngine {
   // precomputed columns in the pair loop. Null semantics are identical by
   // construction: the columns are the very same sub-expressions, evaluated
   // on the same rows, just earlier (oracle-verified across all 20 views).
+  // `ns` namespaces the columns of a second spec that reads other tag keys.
 
-  private[engine] def withHoistA(df: DataFrame, spec: Tags.MatchSpec): DataFrame = {
+  private[engine] def withHoistA(df: DataFrame, spec: Tags.MatchSpec, ns: String = ""): DataFrame = {
     val t = col("tags")
-    var d = df
-    spec.refKeys.zipWithIndex.foreach { case (k, i) =>
-      d = d.withColumn(s"__ah$i", map_contains_key(t, lit(k)))
-        .withColumn(s"__aa$i", split(t(k), ";"))
-        .withColumn(s"__av$i", t(k))
-    }
-    spec.nameKey.foreach { nk =>
-      d = d.withColumn("__ahn", map_contains_key(t, lit(nk)))
-        .withColumn("__aln", lower(t(nk)))
-        .withColumn("__avn", t(nk))
-    }
-    d
+    df.select(col("*") +: (spec.refKeys.zipWithIndex.flatMap { case (k, i) =>
+      Seq(map_contains_key(t, lit(k)).as(s"__${ns}ah$i"), split(t(k), ";").as(s"__${ns}aa$i"),
+        t(k).as(s"__${ns}av$i"))
+    } ++ spec.nameKey.toSeq.flatMap(nk => Seq(map_contains_key(t, lit(nk)).as(s"__${ns}ahn"),
+      lower(t(nk)).as(s"__${ns}aln"), t(nk).as(s"__${ns}avn")))): _*)
   }
 
-  private[engine] def withHoistB(df: DataFrame, spec: Tags.MatchSpec, tagsB: Column): DataFrame = {
-    var d = df
-    spec.refKeys.zipWithIndex.foreach { case (k, i) =>
-      d = d.withColumn(s"__ba$i", split(tagsB(k), ";"))
-        .withColumn(s"__bv$i", tagsB(k))
-    }
-    spec.nameKey.foreach { nk =>
-      d = d.withColumn("__bln", lower(tagsB(nk)))
-        .withColumn("__bvn", tagsB(nk))
-    }
-    d
-  }
+  private[engine] def withHoistB(df: DataFrame, spec: Tags.MatchSpec, tagsB: Column,
+                                 ns: String = ""): DataFrame =
+    df.select(col("*") +: (spec.refKeys.zipWithIndex.flatMap { case (k, i) =>
+      Seq(split(tagsB(k), ";").as(s"__${ns}ba$i"), tagsB(k).as(s"__${ns}bv$i"))
+    } ++ spec.nameKey.toSeq.flatMap(nk =>
+      Seq(lower(tagsB(nk)).as(s"__${ns}bln"), tagsB(nk).as(s"__${ns}bvn")))): _*)
 
   /** matchConditionCol over the hoisted columns (same truth table, same
     * null propagation — see GeoFunctions.matchConditionCol). */
-  private[engine] def condHoisted(spec: Tags.MatchSpec, dist: Column): Column = {
+  private[engine] def condHoisted(spec: Tags.MatchSpec, dist: Column, ns: String = ""): Column = {
     val refsAgree = spec.refKeys.indices.map(i =>
-        col(s"b___ah$i") && arrays_overlap(col(s"b___aa$i"), col(s"p___ba$i")))
+        col(s"b___${ns}ah$i") && arrays_overlap(col(s"b___${ns}aa$i"), col(s"p___${ns}ba$i")))
       .reduceOption(_ && _).getOrElse(lit(false))
     val namesAgree = spec.nameKey.map(_ =>
-      col("b___ahn") && (col("b___aln") === col("p___bln"))).getOrElse(lit(false))
+      col(s"b___${ns}ahn") && (col(s"b___${ns}aln") === col(s"p___${ns}bln"))).getOrElse(lit(false))
     (refsAgree && dist <= spec.dRef) || (namesAgree && dist <= spec.dName) ||
       dist <= spec.dOther
   }
@@ -190,8 +166,33 @@ object MatchEngine {
       .otherwise(lit(spec.dOther) + dist)
   }
 
+  /**
+   * Build the match view.
+   *
+   * Inputs (caller pre-filters/projects, mirroring the views' CTEs):
+   *  - osm: (type, id, tags MAP, geom WKB, cx, cy, is_point [, muni_code])
+   *  - ups: (ids ARRAY<LONG>, tags MAP or tag_alts ARRAY<MAP>, geometry WKB,
+   *          cx, cy, is_point [, muni_code])
+   *
+   * Output (the mv_match_* schema, 12:23-29 + osm geom carried for tiles):
+   *   upstream_item_ids, upstream_tags (same type as input tags),
+   *   upstream_geom, osm_element_id, osm_element_type, osm_tags, osm_geom,
+   *   dist [, carryUps]
+   *
+   * Leg 1 (J1/J2/J4) is the best candidate per upstream row, or the row
+   * with null osm columns when it has none. The anti leg (J5) is every osm
+   * row without a candidate under the anti spec and anti keys, with an empty
+   * ids array. Both come from one candidate set, one explode and one
+   * window; no config takes a second cell join.
+   *
+   * Rank-key contract: every ups row has a non-empty `ids` array whose first
+   * element no other ups row shares. A violation fails the query in-plan.
+   * Under `muniGuardWhere` there are no upstream sentinels, so a shared
+   * first id goes unchecked there.
+   */
   def matchView(osm: DataFrame, ups: DataFrame, cfg: MatchConfig): DataFrame = {
     val spec = cfg.matchSpec
+    val antiSpec = cfg.antiMatchSpec.getOrElse(spec)
     val upsTagsCol = if (ups.columns.contains("tag_alts")) "tag_alts" else "tags"
 
     // tags_b as seen by match_condition/match_score — empty map when the
@@ -200,81 +201,109 @@ object MatchEngine {
       if (cfg.tagsVisibleToMatch && upsTagsCol == "tags") col("tags")
       else map().cast("map<string,string>")
 
+    // ONE cell join serves both legs: at the wider radius, on the equi-keys
+    // both legs share; each leg's own keys, spec and guard become per-pair
+    // conditions. The anti spec hoists its own columns only when it reads
+    // other tag keys than the match spec.
+    val antiKeys =
+      if (cfg.antiLeg) cfg.antiExtraJoinKeys.getOrElse(cfg.extraJoinKeys) else cfg.extraJoinKeys
+    val sharedKeys = cfg.extraJoinKeys.intersect(antiKeys)
+    val antiNs =
+      if (antiSpec.nameKey == spec.nameKey && antiSpec.refKeys == spec.refKeys) "" else "x"
+    def hoisted(df: DataFrame, hoist: (DataFrame, Tags.MatchSpec, String) => DataFrame) = {
+      val d = hoist(df, spec, "")
+      if (cfg.antiLeg && antiNs.nonEmpty) hoist(d, antiSpec, antiNs) else d
+    }
+    val radius = if (cfg.antiLeg) spec.maxDistance max antiSpec.maxDistance else spec.maxDistance
     val candidates = SpatialJoin.dwithinCandidates(
-      build = withHoistA(osm, spec), probe = withHoistB(ups, spec, tagsBRaw),
+      build = hoisted(osm, withHoistA(_, _, _)),
+      probe = hoisted(ups, withHoistB(_, _, tagsBRaw, _)),
       buildGeom = "geom", probeGeom = "geometry",
-      spec = DWithinSpec(spec.maxDistance, cfg.cellSize, cfg.saltThreshold, cfg.saltFactor),
-      extraKeys = cfg.extraJoinKeys)
+      spec = DWithinSpec(radius, cfg.cellSize, cfg.saltThreshold, cfg.saltFactor),
+      extraKeys = sharedKeys)
 
     // native codegen'd condition/score over the hoisted columns (semantics-
     // equivalence vs the Scala reference functions is property-tested in
-    // MatchEngineSpec; hoisted == unhoisted is pinned in MatchEngineSpec too)
-    val matched00 = candidates
-      .filter(cfg.extraCandidateFilter
-        .map(condHoisted(spec, col("dist")) && _)
-        .getOrElse(condHoisted(spec, col("dist"))))
+    // MatchEngineSpec; hoisted == unhoisted is pinned in MatchEngineSpec too).
+    // A spec's condition implies dist <= its own maxDistance, so the wider
+    // radius adds no pair to the narrower leg.
+    def keysEqual(ks: Seq[String]): Column =
+      ks.map(k => col(s"b_$k") === col(s"p_$k")).foldLeft(lit(true))(_ && _)
+    val extra = cfg.extraCandidateFilter.getOrElse(lit(true))
+    val legCond = condHoisted(spec, col("dist")) && extra &&
+      keysEqual(cfg.extraJoinKeys.diff(sharedKeys)) &&
+      (if (cfg.muniGuardWhere || cfg.muniGuardCondition)
+        col("b_muni_code") === col("p_muni_code") else lit(true))
+    // the anti leg ignores the muni guard (12:31-37); a NULL osm key never
+    // matches in the reference's anti join, so it leaves no marker
+    val antiCond = condHoisted(antiSpec, col("dist"), antiNs) && extra &&
+      keysEqual(antiKeys.diff(sharedKeys)) && col("b_type").isNotNull && col("b_id").isNotNull
+    val pairs0 = candidates.filter(if (cfg.antiLeg) legCond || antiCond else legCond)
+    // NOTE: when enabled, this cache lives until the session ends (the frame
+    // that consumes it is returned lazily, so there is no safe unpersist
+    // point inside this function); no production caller enables it
+    val pairs = if (cfg.cacheCandidates) pairs0.cache() else pairs0
+
+    // Each refined pair explodes into a full-payload leg-1 row keyed by the
+    // upstream key (__osm = false) and a narrow "matched" marker keyed by the
+    // osm key (__osm = true). Sentinels (__s) are unioned in: one per ups row
+    // with +inf score, so rank-1 over (pairs ∪ sentinel) IS the left outer
+    // best-match (omitted under the WHERE-guard, 12:28, where guard-filtered
+    // ups rows vanish from leg 1), and one per osm row carrying its anti-leg
+    // payload, kept iff its partition holds no marker — the left_anti of
+    // `FROM osm LEFT JOIN ups ... WHERE ups.id IS NULL` (12:31-37), under
+    // which duplicate unmatched osm rows all survive.
+    val kind =
+      if (cfg.antiLeg) explode(array(when(legCond, false), when(antiCond, true))) else lit(false)
+    def legOnly(c: String) = when(!col("__osm"), col(c)).as(c)
+    val upsPayload = Seq("ids", upsTagsCol, "geometry") ++ cfg.carryUps
+    val rows = pairs
       .withColumn("score", scoreHoisted(spec, col("dist")))
-    // NOTE: when enabled, this cache lives until the session ends (the legs
-    // that consume it are returned lazily, so there is no safe unpersist
-    // point inside this function) — no production caller enables it
-    // (default OFF, see BenchPipeline.config)
-    val matched0 = if (cfg.cacheCandidates) matched00.cache() else matched00
+      .withColumn("__osm", kind).filter(col("__osm").isNotNull)
+      .select(Seq(col("__osm"), lit(false).as("__s"), col("b_id"), col("b_type")) ++
+        (upsPayload.map("p_" + _) ++ Seq("b_tags", "b_geom", "dist", "score")).map(legOnly): _*)
+    val upsSentinels = ups.select(Seq(lit(false).as("__osm"), lit(true).as("__s"),
+      lit(Double.MaxValue).as("score")) ++ upsPayload.map(c => col(c).as(s"p_$c")): _*)
+    val osmSentinels = osm.select(lit(true).as("__osm"), lit(true).as("__s"),
+      array().cast("array<long>").as("p_ids"), col("id").as("b_id"), col("type").as("b_type"),
+      col("tags").as("b_tags"), col("geom").as("b_geom"))
+    val withUps =
+      if (cfg.muniGuardWhere) rows else rows.unionByName(upsSentinels, allowMissingColumns = true)
+    val all =
+      if (cfg.antiLeg) withUps.unionByName(osmSentinels, allowMissingColumns = true) else withUps
 
-    val matched =
-      if (cfg.muniGuardWhere || cfg.muniGuardCondition)
-        matched0.filter(col("b_muni_code") === col("p_muni_code"))
-      else matched0
-
-    // rank-1 per upstream row; key on the ids array (unique per ups row).
-    // The left extension ("missing from OSM") is NOT a join back to ups:
-    // every ups row contributes one synthetic null-candidate with +inf score,
-    // so rank-1 over (candidates ∪ sentinels) IS the left outer best-match —
-    // one shuffle instead of a window plus an extra shuffle join. With the
-    // WHERE-guard (reference behavior, 12:28) the sentinel is omitted and
-    // guard-filtered ups rows vanish from leg 1.
-    val candCols = Seq(
-      col("p_ids"), col(s"p_$upsTagsCol"), col("p_geometry"),
-      col("b_id"), col("b_type"), col("b_tags"), col("b_geom"),
-      col("dist"), col("score")) ++ cfg.carryUps.map(c => col(s"p_$c"))
-    val ranked0 = matched.select(candCols: _*)
-    val ranked =
-      if (cfg.muniGuardWhere) ranked0
-      else ranked0.unionByName(ups.select(Seq(
-        col("ids").as("p_ids"),
-        col(upsTagsCol).as(s"p_$upsTagsCol"),
-        col("geometry").as("p_geometry"),
-        lit(null).cast("long").as("b_id"),
-        lit(null).cast("string").as("b_type"),
-        lit(null).cast("map<string,string>").as("b_tags"),
-        lit(null).cast("binary").as("b_geom"),
-        lit(null).cast("double").as("dist"),
-        lit(Double.MaxValue).as("score")) ++
-          cfg.carryUps.map(c => col(c).as(s"p_$c")): _*))
-    // rank-window key: the FIRST item id is a scalar surrogate for the ids
-    // array (group-collapse always emits disjoint sorted arrays, so first
-    // elements are unique across ups rows) — hashing a LONG for the window
-    // shuffle instead of an ARRAY<LONG> per row (VERDICT r1 watch item).
-    // CONTRACT: every ups row must carry a NON-EMPTY ids array with a unique
-    // first element — an empty/null-first array would key to __pk = NULL and
-    // all such rows would collapse into one window partition (rank-1 keeps a
-    // single row, silently dropping the rest). All registry views satisfy
-    // this by construction (array(id) / sorted collect_list of ≥1 id); a
-    // NULL key fails the query in-plan (the BM25 overflow guard's
-    // raise_error pattern — no extra action).
+    // ONE window ranks leg 1 and decides the anti leg: partitions are
+    // (kind, key). The upstream key is the FIRST item id, a scalar surrogate
+    // for the ids array (hashing a LONG for the window shuffle instead of an
+    // ARRAY<LONG> per row, VERDICT r1 watch item). Both halves of the
+    // rank-key contract (see the scaladoc) fail the query in-plan, with the
+    // BM25 overflow guard's raise_error pattern and no extra action: a NULL
+    // first id here, and a second sentinel in one upstream partition below,
+    // which would otherwise let rank-1 silently drop all but one of the rows.
     // rank-1 is a sort window over the unique total order (score, b_type,
-    // b_id); groups are per upstream key and cell-bounded, so the candidate
-    // join already caps per-key skew (a min_by aggregation lost its A/B to
-    // the window's one sort: BASELINE.md "Rank-form A/B").
+    // b_id); groups are per key and cell-bounded, so the candidate join
+    // already caps per-key skew (a min_by aggregation lost its A/B to the
+    // window's one sort: BASELINE.md "Rank-form A/B").
     val firstId = get(col("p_ids"), lit(0))
-    val keyed = ranked.withColumn("__pk", when(firstId.isNotNull, firstId)
-      .otherwise(raise_error(concat(lit("matchView rank-key contract: an upstream " +
-        "row's ids array is null, empty or starts with null (ids = "),
-        coalesce(col("p_ids").cast("string"), lit("NULL")), lit(")")))))
-    val w = Window.partitionBy(col("__pk"))
+    def contract(what: String, ids: Column) = raise_error(concat(
+      lit(s"matchView rank-key contract: $what (ids = "),
+      coalesce(ids.cast("string"), lit("NULL")), lit(")")))
+    val w = Window.partitionBy(col("__osm"), col("__k"), col("__t"))
       .orderBy(col("score"), col("b_type"), col("b_id"))
-    val top1 = keyed.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-    val leg1 = top1
+    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val uniqueKey = when(col("__sentinels") <= 1, lit(true)).otherwise(contract(
+      "two upstream rows share the first id", col("p_ids")))
+    all
+      .withColumn("__k", when(col("__osm"), col("b_id")).when(firstId.isNotNull, firstId)
+        .otherwise(contract("an upstream row's ids array is null, empty or starts with null",
+          col("p_ids"))))
+      .withColumn("__t", when(col("__osm"), col("b_type")))
+      // one select, so the three window functions share ONE Window operator
+      .select(col("*"), row_number().over(w).as("__rn"),
+        count(when(col("__s"), 1)).over(whole).as("__sentinels"),
+        count(when(!col("__s"), 1)).over(whole).as("__markers"))
+      .filter(when(col("__osm"), col("__s") && col("__markers") === 0)
+        .otherwise(col("__rn") === 1 && uniqueKey))
       .select(Seq(
         col("p_ids").as("upstream_item_ids"),
         col(s"p_$upsTagsCol").as("upstream_tags"),
@@ -284,46 +313,5 @@ object MatchEngine {
         col("b_tags").as("osm_tags"),
         col("b_geom").as("osm_geom"),
         col("dist")) ++ cfg.carryUps.map(c => col(s"p_$c").as(c)): _*)
-
-    if (!cfg.antiLeg) leg1
-    else {
-      // anti leg (J5): OSM rows with NO upstream candidate under the anti
-      // spec (which may widen the distance), ignoring the muni guard —
-      // matching `FROM osm LEFT JOIN ups ON match_condition WHERE ups.id IS
-      // NULL` (12:31-37). When the anti spec IS the match spec, the matched
-      // OSM keys are exactly matched0's build keys — reuse them instead of
-      // recomputing the whole cell join (halves the candidate work).
-      val antiSpec = cfg.antiMatchSpec.getOrElse(spec)
-      val antiKeys = cfg.antiExtraJoinKeys.getOrElse(cfg.extraJoinKeys)
-      val antiMatched =
-        if (cfg.antiMatchSpec.isEmpty && antiKeys == cfg.extraJoinKeys) matched0
-        else SpatialJoin.dwithinCandidates(
-            build = withHoistA(osm, antiSpec), probe = withHoistB(ups, antiSpec, tagsBRaw),
-            buildGeom = "geom", probeGeom = "geometry",
-            spec = DWithinSpec(antiSpec.maxDistance, cfg.cellSize, cfg.saltThreshold, cfg.saltFactor),
-            extraKeys = antiKeys)
-          // extraCandidateFilter applies here too — the reuse branch above
-          // (matched0) includes it, and the two branches must agree on what
-          // counts as "matched" or the anti population depends on which
-          // branch a config happens to take
-          .filter(cfg.extraCandidateFilter
-            .map(condHoisted(antiSpec, col("dist")) && _)
-            .getOrElse(condHoisted(antiSpec, col("dist"))))
-      val antiCands = antiMatched
-        .select(col("b_type").as("type"), col("b_id").as("id"))
-        .distinct()
-      val anti = osm.join(antiCands, Seq("type", "id"), "left_anti")
-        .select(Seq(
-          array().cast("array<long>").as("upstream_item_ids"),
-          lit(null).cast(leg1.schema("upstream_tags").dataType).as("upstream_tags"),
-          lit(null).cast("binary").as("upstream_geom"),
-          col("id").as("osm_element_id"),
-          col("type").as("osm_element_type"),
-          col("tags").as("osm_tags"),
-          col("geom").as("osm_geom"),
-          lit(null).cast("double").as("dist")) ++
-            cfg.carryUps.map(c => lit(null).cast(leg1.schema(c).dataType).as(c)): _*)
-      leg1.select(anti.columns.map(col): _*).unionByName(anti)
-    }
   }
 }

@@ -63,9 +63,9 @@ object SpatialJoin {
       .drop("__c")
   }
 
-  /** Rename every column of `df` to `prefix + name`. */
+  /** Rename every column of `df` to `prefix + name`, in one projection. */
   def prefixAll(df: DataFrame, prefix: String): DataFrame =
-    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
+    df.select(df.columns.toSeq.map(c => df.col(c).as(prefix + c)): _*)
 
   // ---- native (codegen) cell ids for point rows ----------------------------
   // Mirrors graft.core.cell.Grid.cellOf exactly: both use floor(x/s).toLong,

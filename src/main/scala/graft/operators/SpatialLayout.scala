@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import graft.core.cell.Morton
 
 /**
@@ -189,6 +192,41 @@ object SpatialLayout {
       .filter(col("dist") <= lit(distance))
       .drop("cell")
 
+  /** Every node of a frame's EXECUTED plan, pre-order, descending into AQE
+    * query stages (a naive `collect` treats ShuffleQueryStageExec as a leaf
+    * and undercounts). Run an action on `df` first so AQE has finalized the
+    * plan. */
+  def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: QueryStageExec => walk(q.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    })
+  }
+
+  /** Exchange nodes of [[executedNodes]]. Used by the bucketed-join specs
+    * AND the driver-gate sync entry, which asserts its store-side join
+    * planned with zero store Exchange. */
+  def exchangeNodes(df: DataFrame): Seq[String] = executedNodes(df).collect {
+    case e: Exchange => e.nodeName
+    case _: ReusedExchangeExec => "ReusedExchange"
+  }
+
+  /** Every node name of [[executedNodes]] — gate entries assert the ABSENCE
+    * of a node class (BroadcastNestedLoopJoin, CartesianProduct) with this. */
+  def planNodeNames(df: DataFrame): Seq[String] = executedNodes(df).map(_.nodeName)
+
+  /** Root paths of every file scan in a frame's EXECUTED plan — gate
+    * entries assert which STORED state an incremental step actually reads
+    * (e.g. the signature store, never the corpus text). */
+  def scanRootPaths(df: DataFrame): Seq[String] = executedNodes(df).flatMap {
+    case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+    case _ => Nil
+  }
+
   /**
    * The per-sync shape: a fresh (un-bucketed) batch dwithin-joined against
    * the persisted bucketed store. The batch side explodes over its
@@ -202,75 +240,6 @@ object SpatialLayout {
    * `buildTable` must have been written by `writeBucketedPoints` with
    * `radius = 0` and the same `cellSize`; `distance` ≤ `cellSize`.
    */
-  /** Exchange nodes in a frame's EXECUTED plan, descending into AQE query
-    * stages (a naive `collect` treats ShuffleQueryStageExec as a leaf and
-    * undercounts). Run an action on `df` first so AQE has finalized the
-    * plan. Used by the bucketed-join specs AND the driver-gate sync entry,
-    * which asserts its store-side join planned with zero store Exchange. */
-  def exchangeNodes(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-    def walk(p: SparkPlan): Seq[String] = {
-      val self = p match {
-        case e: Exchange => Seq(e.nodeName)
-        case _: ReusedExchangeExec => Seq("ReusedExchange")
-        case _ => Nil
-      }
-      val below = p match {
-        case q: QueryStageExec => walk(q.plan)
-        case _ => p.children.flatMap(walk)
-      }
-      self ++ below
-    }
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    walk(root)
-  }
-
-  /** Every node name in a frame's EXECUTED plan (same AQE-aware walk as
-    * [[exchangeNodes]]) — gate entries assert the ABSENCE of a node class
-    * (BroadcastNestedLoopJoin, CartesianProduct) with this. */
-  def planNodeNames(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[String] = p.nodeName +: (p match {
-      case q: QueryStageExec => walk(q.plan)
-      case _ => p.children.flatMap(walk)
-    })
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    walk(root)
-  }
-
-  /** Root paths of every file scan in a frame's EXECUTED plan — gate
-    * entries assert which STORED state an incremental step actually reads
-    * (e.g. the signature store, never the corpus text). */
-  def scanRootPaths(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[String] = {
-      val self = p match {
-        case f: FileSourceScanExec =>
-          f.relation.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-      self ++ (p match {
-        case q: QueryStageExec => walk(q.plan)
-        case _ => p.children.flatMap(walk)
-      })
-    }
-    val root = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    walk(root)
-  }
-
   def bucketedDWithinBatch(batch: DataFrame, buildTable: String,
                            pX: String, pY: String, bX: String, bY: String,
                            cellSize: Double, distance: Double): DataFrame = {

@@ -7,10 +7,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import graft.engine.BenchPipeline
+import graft.operators.SpatialLayout
 
 /**
  * The profiler of the flagship pipeline and the headline gate queries: one
@@ -23,7 +26,9 @@ import graft.engine.BenchPipeline
  *    core, uncompressed cache), one warm-up run, then `reps` timed
  *    [[BenchPipeline.pipelineCounts]] actions. Prints `PIPE` (wall, counts,
  *    GC seconds) and `FLOOR` (action start → first job, gaps between jobs,
- *    per-job wall) per rep, and the `PSTAGE` table of the last rep.
+ *    per-job wall) per rep, then the `PLAN` line (joins, cell equi-joins and
+ *    shuffle exchanges of the action's executed plan) and the `PSTAGE` table
+ *    of the last rep.
  *  - `headline <sfDir> <cpus> <trials> [planTag] [only]`: each headline
  *    query through the noop sink (every column of every row computed, no
  *    collection), min-of-`trials`, the `STAGE` table of the last trial;
@@ -87,10 +92,25 @@ object Profile {
     } finally sc.removeSparkListener(l)
   }
 
-  /** one profiled flagship action: (match rows, emitted deviation rows) */
+  /** joins, cell equi-joins (a join keyed on the spatial `cell` column) and
+    * shuffle exchanges of a frame's executed plan; run an action first */
+  final case class PlanShape(joins: Int, cellJoins: Int, exchanges: Int)
+  def planShape(df: DataFrame): PlanShape = {
+    val nodes = SpatialLayout.executedNodes(df)
+    val joins = nodes.collect { case j: BaseJoinExec => j }
+    PlanShape(joins.size,
+      joins.count(_.leftKeys.exists(_.references.exists(_.name == "cell"))),
+      nodes.count(_.isInstanceOf[ShuffleExchangeLike]))
+  }
+
+  /** one profiled flagship action: (match rows, emitted deviation rows) and
+    * the shape of the plan that counted them */
   def pipeline(spark: SparkSession, nSites: Long,
-               l: Listener = new Listener): Run[(Long, Long)] =
-    profiled(spark, l)(BenchPipeline.pipelineCounts(spark, nSites))
+               l: Listener = new Listener): Run[((Long, Long), PlanShape)] =
+    profiled(spark, l) {
+      val frame = BenchPipeline.pipelineFrame(spark, nSites)
+      (BenchPipeline.countsOf(frame), planShape(frame))
+    }
 
   private def session(cores: Int, aqe: Boolean): SparkSession = {
     val s = SparkSession.builder()
@@ -119,13 +139,17 @@ object Profile {
     settle()
     for (rep <- 1 to reps) {
       val r = pipeline(spark, n)
-      val (m, d) = r.result
+      val ((m, d), plan) = r.result
       println(f"PIPE cores=$cores n=$n rep=$rep sec=${r.sec}%.2f match=$m dev=$d gc_sec=${r.gcSec}%.2f")
       val gaps = r.jobs.sliding(2).collect { case Seq(a, b) => b.startMs - a.endMs }
       println(s"FLOOR cores=$cores rep=$rep planLead=${r.jobs.headOption.fold(-1L)(_.startMs - r.startMs)}ms " +
         s"jobGaps=${gaps.mkString("+")}ms postLast=${r.jobs.lastOption.fold(-1L)(r.endMs - _.endMs)}ms " +
         "jobs=" + r.jobs.map(j => s"j${j.id}:${j.endMs - j.startMs}ms/${j.stages}st").mkString(","))
-      if (rep == reps) printStages("PSTAGE", r.stages)
+      if (rep == reps) {
+        println(s"PLAN cores=$cores joins=${plan.joins} cell_joins=${plan.cellJoins} " +
+          s"exchanges=${plan.exchanges}")
+        printStages("PSTAGE", r.stages)
+      }
       settle()
     }
     spark.stop()

@@ -111,4 +111,20 @@ class MatchEngineSpec extends AnyFunSuite {
         s"wanted the contract error, got: ${messages(e).take(300)}")
     }
   }
+
+  test("two upstream rows sharing a first id fail the match (rank-key contract)") {
+    val (osm, ups) = BenchPipeline.extract(graft.sources.Pages.synthesize(spark, 40L))
+    def messages(t: Throwable): String =
+      if (t == null) "" else t.toString + messages(t.getCause)
+    // a second row keyed like an existing one lands in that row's rank
+    // partition, and rank-1 kept only one of the two
+    val first = ups.limit(1)
+    val clash = ups.unionByName(first.withColumn("ids",
+      concat(col("ids"), array(lit(Long.MaxValue)))))
+    val e = intercept[Exception] {
+      MatchEngine.matchView(osm, clash, BenchPipeline.config()).collect()
+    }
+    assert(messages(e).contains("matchView rank-key contract: two upstream rows share"),
+      s"wanted the contract error, got: ${messages(e).take(300)}")
+  }
 }

@@ -72,6 +72,19 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(windows == 1, s"expected 1 rank window, got $windows\n$tree")
   }
 
+  test("matchView plans ONE cell join and ONE rank window under every config") {
+    import MatchSinglePassSpec._
+    val (osm, ups) = fixture(spark)
+    for ((name, cfg, alts) <- configs) {
+      val m = MatchEngine.matchView(osm, if (alts) withAlternatives(ups) else ups, cfg)
+      m.collect() // materialize so AQE settles on the final plan
+      val shape = graft.tools.Profile.planShape(m)
+      val windows = graft.operators.SpatialLayout.planNodeNames(m).count(_ == "Window")
+      assert(shape.cellJoins == 1 && windows == 1,
+        s"$name: $shape, $windows windows\n${m.queryExecution.executedPlan}")
+    }
+  }
+
   test("export top-1000 plans as distributed TakeOrdered, not a global window") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

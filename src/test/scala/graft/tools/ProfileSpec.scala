@@ -5,8 +5,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import graft.engine.{BenchPipeline, SparkTestBase}
 
 /** Profile's one listener: the profiled pipeline action counts what the
-  * bench action counts, the listener sees its stages and jobs, and it is
-  * gone from the shared session once the run returns. */
+  * bench action counts, its plan holds one cell join, the listener sees its
+  * stages and jobs, and it is gone from the shared session once the run
+  * returns. */
 class ProfileSpec extends AnyFunSuite {
   val spark = SparkTestBase.spark
 
@@ -15,7 +16,9 @@ class ProfileSpec extends AnyFunSuite {
     val expected = BenchPipeline.pipelineCounts(spark, n)
     val l = new Profile.Listener
     val r = Profile.pipeline(spark, n, l)
-    assert(r.result == expected)
+    assert(r.result._1 == expected)
+    // one cell join feeds both match legs
+    assert(r.result._2.cellJoins == 1, r.result._2)
     assert(r.stages.nonEmpty, "empty stage table")
     assert(r.stages.map(_.runMs).sum > 0, s"no executor time: ${r.stages}")
     assert(r.jobs.nonEmpty && r.jobs.forall(j => j.endMs >= j.startMs), r.jobs)
