@@ -99,7 +99,7 @@ object QueriesIncrPipe {
         .getOrElse(sys.error("streaming host-graph sync produced no state"))
         .select(col("src_host"), col("dst_host"), col("n_links"))
       val rows = out.collect()
-      graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(tmp))
+      graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(tmp))
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     }),
 
@@ -172,7 +172,7 @@ object QueriesIncrPipe {
         col("url").as("k1"), lit("").as("k2"), col("last_ts").as("v"))
       val out = graft.operators.Materialize(
         edges.unionByName(sigs).unionByName(crawls).unionByName(ledger))
-      graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(tmp))
+      graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(tmp))
       out
     }))
 

@@ -176,7 +176,7 @@ object QueriesPipelineOracle {
         stCentroid(col("center"))("_2").as("cy"))
       // materialize, then delete the temp tree (same hygiene as q_store_resume)
       val rows = out.collect()
-      graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(tmp))
+      graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(tmp))
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     }),
 
@@ -228,7 +228,7 @@ object QueriesPipelineOracle {
         graft.operators.Materialize(syncs.reduce(_ unionByName _))
       } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
       s.sql("DROP TABLE IF EXISTS q_sync_store_b")
-      graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(tmp))
+      graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(tmp))
       out
     }))
 

@@ -250,7 +250,7 @@ object QueriesSpatial {
           .select(col("a_id"), col("b_id"), round(col("dist"), 3).as("dist")))
       s.sql("DROP TABLE IF EXISTS q_sp_bucketed_a")
       s.sql("DROP TABLE IF EXISTS q_sp_bucketed_b")
-      graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(dirTmp))
+      graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(dirTmp))
       out
     }),
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GeoFunctions._
-import graft.engine.MatchStore
+import graft.engine.{MatchStore, PartitionedStore}
 
 /**
  * Checkpoint/resume behind the correctness gate — the north rule's
@@ -63,7 +63,7 @@ object QueriesStore {
       val agg = store.read().groupBy("range")
         .agg(count(lit(1)).as("n"), sum("v").as("sum_v"))
       val rows = agg.collect()
-      MatchStore.deleteRecursively(java.nio.file.Paths.get(path))
+      PartitionedStore.deleteRecursively(java.nio.file.Paths.get(path))
       s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
     }))
 

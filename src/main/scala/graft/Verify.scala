@@ -43,6 +43,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.engine.BenchPipeline.releaseSharedInputs(spark)
     spark.stop()
   }
 }

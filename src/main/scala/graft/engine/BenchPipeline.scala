@@ -154,7 +154,8 @@ object BenchPipeline {
 
   /** memoized extracted inputs for the driver-gate entries: the five
     * q_pipe_* queries consume the same synthesized corpus within one
-    * session — one shared cached pair replaces five leaked ones. */
+    * session — one shared cached pair replaces five leaked ones. Held until
+    * [[releaseSharedInputs]] for the session. */
   private val sharedInputCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, Long), (DataFrame, DataFrame)]()
   def sharedInputs(spark: SparkSession, nSites: Long = 3000L): (DataFrame, DataFrame) =
@@ -162,6 +163,15 @@ object BenchPipeline {
       val (osm, ups) = extract(Pages.synthesize(s, n))
       (osm.cache(), ups.cache())
     })
+
+  /** unpersists `spark`'s shared inputs and drops them from the memo, so a
+    * stopped session is not pinned; a later [[sharedInputs]] fills afresh */
+  def releaseSharedInputs(spark: SparkSession): Unit =
+    sharedInputCache.keySet.forEach { k =>
+      if (k._1 eq spark) Option(sharedInputCache.remove(k)).foreach { case (osm, ups) =>
+        osm.unpersist(); ups.unpersist()
+      }
+    }
 
   def deviations(matchDf: DataFrame): DataFrame =
     DeviationView.deviations(matchDf, DeviationConfig(

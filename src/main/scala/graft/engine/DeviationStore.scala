@@ -1,10 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.broadcast.Broadcast
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /**
  * The api.deviation table as a versioned-snapshot parquet store with the
@@ -24,85 +23,29 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *    row — matching the reference, whose INSERT .. ON CONFLICT DO UPDATE
  *    RETURNING yields one row per input row (each inserts or updates).
  *
- * Storage is PARTITIONED BY VIEW: `view=<name>/v=N` snapshot dirs with a
- * per-view `_latest` pointer — `sync(view)` reads and rewrites ONLY that
- * view's partition (the r1 design rewrote the whole table every sync, O(total
- * state) per dataset; at 20 views × large state that is a scale-killer —
- * VERDICT r1 #6). Checkpointing (north rule): every sync writes a new
- * snapshot dir plus `_metrics/N.json` carrying per-partition row counts and
- * input lineage, and flips the pointer last — a failed run is invisible and
- * any view can be recomputed idempotently. No Iceberg jar ships in this
- * environment, so the snapshot/pointer protocol is hand-rolled; on a real
- * cluster this maps 1:1 onto an Iceberg table partitioned by view_name with
- * MERGE + snapshot metadata.
+ * Storage is PARTITIONED BY VIEW as [[PartitionedStore.Snapshots]] (the
+ * snapshot/pointer protocol and its Iceberg mapping are described there):
+ * `view=<name>/v=N` — `sync(view)` reads and rewrites ONLY that view's
+ * snapshot (the r1 design rewrote the whole table every sync, O(total state)
+ * per dataset; at 20 views × large state that is a scale-killer — VERDICT r1
+ * #6), and any view can be recomputed idempotently.
  */
 class DeviationStore(spark: SparkSession, path: String) {
   import DeviationStore._
 
-  private def viewRoot(view: String) = s"$path/view=$view"
+  private val snapshots = new PartitionedStore.Snapshots(spark, path, "view", schema)
 
   /** the same store, with its Datasets built from `session` */
   def withSession(session: SparkSession): DeviationStore = new DeviationStore(session, path)
 
-  private def latestVersionOf(view: String): Option[Int] = {
-    val p = Paths.get(viewRoot(view), "_latest")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt) else None
-  }
-
-  /** views that have at least one committed snapshot */
-  def views: Seq[String] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) Nil
-    else {
-      val st = Files.list(root) // closed below: holds an open directory fd
-      val it = st.iterator()
-      val b = Seq.newBuilder[String]
-      try while (it.hasNext) {
-        val d = it.next()
-        val n = d.getFileName.toString
-        if (n.startsWith("view=") && Files.exists(d.resolve("_latest")))
-          b += n.stripPrefix("view=")
-      } finally st.close()
-      b.result().sorted
-    }
-  }
-
-  /** a local relation: its plan statistics say 0 bytes, not the unknown
-    * size of an RDD */
-  private def empty: DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-
-  /** latest snapshot of ONE view (partition-pruned read). */
-  def latestFor(view: String): DataFrame = latestVersionOf(view) match {
-    // explicit schema: an all-deleted snapshot dir may contain zero part files
-    case Some(v) => spark.read.schema(schema).parquet(s"${viewRoot(view)}/v=$v")
-    case None    => empty
-  }
-
-  /** latest state across all views (one partition-pruned read per view). */
-  def latest(): DataFrame =
-    views.map(latestFor).reduceOption(_ unionByName _).getOrElse(empty)
-
-  def currentVersion(view: String): Int = latestVersionOf(view).getOrElse(0)
-
-  /** Write one view's next snapshot (with metrics + lineage), flip its pointer. */
-  def commitView(view: String, df: DataFrame, lineage: String): Int = {
-    val v = currentVersion(view) + 1
-    val out = df.select(schema.fieldNames.map(col): _*).cache()
-    out.write.mode(SaveMode.Overwrite).parquet(s"${viewRoot(view)}/v=$v")
-    // per-partition lineage + row counts (scales: one small agg)
-    val counts = out.groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-    out.unpersist()
-    Files.createDirectories(Paths.get(viewRoot(view), "_metrics"))
-    Files.write(Paths.get(viewRoot(view), "_metrics", s"$v.json"),
-      s"""{"version":$v,"lineage":${q(lineage)},"partitions":[${counts.mkString(",")}]}"""
-        .getBytes("UTF-8"))
-    Files.write(Paths.get(viewRoot(view), "_latest"), v.toString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-    v
-  }
+  // views with a committed snapshot; one view's latest snapshot (a pruned
+  // read); every view's; one view's next snapshot, its pointer flipped last
+  def views: Seq[String] = snapshots.keys
+  def latestFor(view: String): DataFrame = snapshots.latest(view)
+  def latest(): DataFrame = snapshots.latest(views)
+  def currentVersion(view: String): Int = snapshots.currentVersion(view)
+  def commitView(view: String, df: DataFrame, lineage: String): Int =
+    snapshots.commit(view, df, lineage)
 
   /** Full-table write, split per view (each view gets its own snapshot). */
   def commit(df: DataFrame, lineage: String): Unit = {
@@ -116,8 +59,6 @@ class DeviationStore(spark: SparkSession, path: String) {
     vs.foreach(v => commitView(v, d.filter(col("view_name") === v), lineage))
     d.unpersist()
   }
-
-  private def q(s: String) = graft.core.Json.quote(s)
 
   /**
    * sync_deviations(view): merge `newDevs` (output of DeviationView.deviations,

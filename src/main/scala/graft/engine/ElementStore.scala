@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.core.cell.Grid
@@ -29,7 +29,8 @@ import graft.core.cell.Grid
  * blocks of its keys, the data and index writes, and a batch-key broadcast
  * per join (7 with AQE off; ElementStoreSpec pins the budget). Merges of
  * different sub-stores may run concurrently. On a real cluster both layers
- * map 1:1 onto Iceberg MERGE INTO with the same partition specs.
+ * map 1:1 onto Iceberg MERGE INTO with the same partition specs. Both
+ * layers are [[PartitionedStore.Parts]].
  */
 class ElementStore(spark: SparkSession, path: String,
                    val blockMeters: Double = 10000.0, idxBuckets: Int = 64) {
@@ -50,6 +51,8 @@ class ElementStore(spark: SparkSession, path: String,
 
   private def dataPath(name: String) = s"$path/$name/data"
   private def idxPath(name: String) = s"$path/$name/idx"
+  private def dataParts(name: String) = new PartitionedStore.Parts(spark, dataPath(name), "cb")
+  private def idxParts(name: String) = new PartitionedStore.Parts(spark, idxPath(name), "kb")
 
   /** row schema per sub-store: recorded by merge (the batch's own), else
     * read once from the data with `cb` pinned to long */
@@ -61,21 +64,11 @@ class ElementStore(spark: SparkSession, path: String,
   private def bucketOf(keyCols: Seq[String]): Column =
     pmod(xxhash64(keyCols.map(col): _*), lit(idxBuckets.toLong)).cast("int")
 
-  /** the existing `part=v` directories of `values` under `root`, read by
-    * path; none existing is an empty local frame, with no data source to
-    * resolve */
-  private def readParts(root: String, part: String, values: Seq[Any],
-                        schema: StructType): DataFrame = {
-    val dirs = values.map(v => s"$root/$part=$v").filter(d => Files.exists(Paths.get(d)))
-    if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
-  }
-
   /** current state (optionally partition-pruned to `blocks`). */
   def read(name: String, blocks: Option[Seq[Long]] = None): DataFrame = {
     require(exists(name), s"element store '$name' not initialized")
     blocks match {
-      case Some(bs) => readParts(dataPath(name), "cb", bs.distinct, schemaOf(name))
+      case Some(bs) => dataParts(name).read(bs.distinct, schemaOf(name))
       case None => spark.read.schema(schemaOf(name)).parquet(dataPath(name))
     }
   }
@@ -133,7 +126,7 @@ class ElementStore(spark: SparkSession, path: String,
     val idxNew = b.select(keys :+ col("cb") :+ bucketOf(keyCols).as("kb"): _*)
     // the touched buckets' index rows, read once for both the old-block
     // lookup and the index rewrite
-    val idxSlice = if (first) None else Some(readParts(idxPath(name), "kb", buckets,
+    val idxSlice = if (first) None else Some(idxParts(name).read(buckets,
       StructType(keyCols.map(bd.schema(_)) :+ StructField("cb", LongType) :+
         StructField("kb", IntegerType))))
     val idxBytes = idxSlice.fold(BigInt(0))(ElementStore.bytesOf)
@@ -141,36 +134,21 @@ class ElementStore(spark: SparkSession, path: String,
     val oldBlocks = idxOld.fold(Seq.empty[Long])(_.join(bKeys, keyCols, "left_semi")
       .select("cb").distinct().collect().map(_.getLong(0)).toSeq)
     val dirtyBlocks = (batchBlocks ++ oldBlocks).distinct
-    val oldData = if (first) None else Some(readParts(dataPath(name), "cb", dirtyBlocks, bd.schema))
+    val oldData = if (first) None else Some(dataParts(name).read(dirtyBlocks, bd.schema))
 
     def write(): Unit = {
-      // --- data merge: read ONLY dirty blocks, drop batch keys, add batch ---
+      // --- data merge: read ONLY dirty blocks, drop batch keys, add batch;
+      // a dirty block whose last row vanished is cleared ---
       val dataCols = b.columns.map(col)
-      val written = Observation()
-      val out = oldData.fold(b)(_
+      dataParts(name).overwrite(oldData.fold(b)(_
         .join(bKeys, keyCols, "left_anti")
         .select(dataCols: _*)
-        .unionByName(b.select(dataCols: _*))
-        // the blocks `out` holds, gathered in the write's own pass (after
-        // it, `out` would re-read the files the write replaced)
-        .observe(written, collect_set(col("cb")).as("cbs")))
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cb").parquet(dataPath(name))
-      // a dirty block whose last row vanished is absent from `out` and thus
-      // not overwritten — clear its directory explicitly (Iceberg MERGE would)
-      if (!first) {
-        val kept = written.get("cbs").asInstanceOf[Iterable[Long]].toSet
-        dirtyBlocks.filterNot(kept).foreach(cb => MatchStore.deleteRecursively(
-          Paths.get(dataPath(name), s"cb=$cb")))
-      }
+        .unionByName(b.select(dataCols: _*))), if (first) Nil else dirtyBlocks)
 
-      // --- index merge: same pattern over the narrow (key -> cb) table ---
-      val idxOut = idxOld.fold(idxNew)(_.join(bKeys, keyCols, "left_anti")
-        .select(idxNew.columns.map(col): _*).unionByName(idxNew))
-      idxOut.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("kb").parquet(idxPath(name))
+      // --- index merge: same pattern over the narrow (key -> cb) table; a
+      // touched bucket always holds the batch's own keys, so none empties ---
+      idxParts(name).overwrite(idxOld.fold(idxNew)(_.join(bKeys, keyCols, "left_anti")
+        .select(idxNew.columns.map(col): _*).unionByName(idxNew)))
     }
     new ElementStore.Staged(dirtyBlocks, oldData.fold(BigInt(0))(ElementStore.bytesOf) + idxBytes,
       () => write(), () => { idxOld.foreach(_.unpersist()); b.unpersist() })
@@ -178,15 +156,7 @@ class ElementStore(spark: SparkSession, path: String,
 
   /** bytes of sub-store `name`'s key-index files: at most `idxBuckets`
     * directories, walked without a job */
-  def indexBytes(name: String): Long = {
-    val root = Paths.get(idxPath(name))
-    if (!Files.exists(root)) 0L
-    else {
-      val files = Files.walk(root)
-      try files.filter(_.toString.endsWith(".parquet")).mapToLong(Files.size(_)).sum()
-      finally files.close()
-    }
-  }
+  def indexBytes(name: String): Long = idxParts(name).bytes
 
   /** Crash-recovery: a failure between merge's data write and index write
     * leaves data without an index — the old readOrEmpty fallback then threw

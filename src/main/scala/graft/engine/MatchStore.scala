@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /**
  * Cell-range-partitioned checkpoint of a match view (the mv_match_* analog)
@@ -16,8 +15,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  *  - `resume(ranges)` re-runs the match restricted to those ranges and
  *    overwrites only them — byte-stable because every stage is deterministic.
  *
- * On a cluster this maps onto Iceberg identity-partitioned tables +
- * overwritePartitions; here the layout is plain parquet `data/range=<id>`
+ * The ranges are [[PartitionedStore.Parts]] (the partition protocol and its
+ * Iceberg mapping are described there): plain parquet `data/range=<id>`
  * dirs beside `_metrics/` (data and metadata separated, as Iceberg does).
  */
 class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 100000.0) {
@@ -27,6 +26,7 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
     * and destroy lineage history) — the parquet analog of Iceberg's
     * data/ vs metadata/ split. */
   private val dataPath = s"$path/data"
+  private val parts = new PartitionedStore.Parts(spark, dataPath, "range")
 
   private val rangeCol = {
     // coarse range id from the feature centroid (upstream side if present,
@@ -51,84 +51,31 @@ class MatchStore(spark: SparkSession, path: String, rangeCellMeters: Double = 10
   def writeAll(matchDf: DataFrame, lineage: String): Unit = {
     val df = withRange(matchDf)
     df.write.mode(SaveMode.Overwrite).partitionBy("range").parquet(dataPath)
-    writeMetrics(lineage)
+    writeMetrics(lineage, read())
   }
 
-  /** recompute + overwrite ONLY the given ranges (idempotent resume). The
-    * overwrite mode is scoped to THIS write via the DataFrameWriter option —
-    * mutating the session conf would silently flip every later partitioned
-    * overwrite in the session to dynamic semantics. A resumed range whose
-    * recompute came out empty is deleted explicitly (dynamic overwrite never
-    * touches partitions absent from the written frame). */
+  /** recompute + overwrite ONLY the given ranges (idempotent resume); a
+    * resumed range whose recompute came out empty is deleted. */
   def resume(matchDf: DataFrame, ranges: Seq[Long], lineage: String): Unit = {
-    val df = withRange(matchDf).filter(col("range").isin(ranges: _*)).cache()
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("range").parquet(dataPath)
-    val present = df.select("range").distinct().collect().map(_.getLong(0)).toSet
-    df.unpersist()
-    ranges.filterNot(present).foreach { r =>
-      MatchStore.deleteRecursively(Paths.get(dataPath, s"range=$r"))
-    }
+    parts.overwrite(withRange(matchDf).filter(col("range").isin(ranges: _*)), ranges)
     // metrics over the RESUMED ranges only (partition-pruned) — a resume
     // must not re-scan the whole store
-    writeMetrics(s"$lineage resume=[${ranges.mkString(",")}]", Some(ranges))
+    writeMetrics(s"$lineage resume=[${ranges.mkString(",")}]",
+      read().filter(col("range").isin(ranges: _*)))
   }
 
   /** partition-dir values are re-inferred as int on read — pin long. */
   def read(): DataFrame =
     spark.read.parquet(dataPath).withColumn("range", col("range").cast("long"))
 
-  def ranges(): Seq[Long] =
-    read().select("range").distinct().collect().map(_.getLong(0)).toSeq
+  /** the ranges on disk, by listing (no job) */
+  def ranges(): Seq[Long] = parts.values.map(_.toLong).sorted
 
-  private def q(s: String) = graft.core.Json.quote(s)
-
-  /** next sequential metrics version: max existing + 1 (durable across JVM
-    * restarts — System.nanoTime has an arbitrary per-JVM origin and would
-    * mis-order runs after a restart). */
-  private def nextVersion(): Long = {
-    val dir = Paths.get(path, "_metrics")
-    if (!Files.exists(dir)) 1L
-    else {
-      val st = Files.list(dir) // closed below: Files.list holds an open fd
-      try {
-        var mx = 0L
-        val it = st.iterator()
-        while (it.hasNext) {
-          val n = it.next().getFileName.toString
-          if (n.endsWith(".json"))
-            scala.util.Try(n.stripSuffix(".json").toLong).foreach(v => mx = math.max(mx, v))
-        }
-        mx + 1
-      } finally st.close()
-    }
-  }
-
-  private def writeMetrics(lineage: String, only: Option[Seq[Long]] = None): Unit = {
-    val scoped = only match {
-      case Some(rs) => read().filter(col("range").isin(rs: _*))
-      case None     => read()
-    }
+  /** `_metrics/<max existing + 1>.json` with `scoped`'s per-range row counts */
+  private def writeMetrics(lineage: String, scoped: DataFrame): Unit = {
     val counts = scoped.groupBy("range").count().collect()
       .map(r => s"""{"range":${r.getLong(0)},"rows":${r.getLong(1)}}""")
-    Files.createDirectories(Paths.get(path, "_metrics"))
-    val v = nextVersion()
-    Files.write(Paths.get(path, "_metrics", s"$v.json"),
-      s"""{"version":$v,"lineage":${q(lineage)},"ranges":[${counts.mkString(",")}]}"""
-        .getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    PartitionedStore.writeMetrics(path, PartitionedStore.metricsVersion(path) + 1, lineage,
+      "ranges", counts.toSeq)
   }
-}
-
-object MatchStore {
-  /** recursive delete with the Files.walk stream properly closed. */
-  def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally st.close()
-    }
 }

@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /**
  * upstream.item maintenance (SURVEY.md §2.1 S3, port of
@@ -23,12 +22,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
  * written partition and fails loudly on an id collision instead of silently
  * merging two items.
  *
- * Storage is PARTITIONED BY DATASET with per-dataset versioned snapshots
- * (`ds=<id>/v=N` + `_latest` pointer, the DeviationStore pattern): a sync
- * reads and rewrites ONLY its dataset — O(dataset), not O(all datasets) —
- * matching the reference's LIST partitioning (07-upstream-base.sql:29-44)
- * where each sync touches one partition. Maps onto Iceberg MERGE + snapshot
- * metadata on a real cluster.
+ * Storage is PARTITIONED BY DATASET as [[PartitionedStore.Snapshots]]
+ * (`ds=<id>/v=N`; the snapshot/pointer protocol and its Iceberg mapping are
+ * described there): a sync reads and rewrites ONLY its dataset — O(dataset),
+ * not O(all datasets) — matching the reference's LIST partitioning
+ * (07-upstream-base.sql:29-44) where each sync touches one partition.
  */
 class UpstreamSync(spark: SparkSession, path: String) {
 
@@ -60,51 +58,13 @@ class UpstreamSync(spark: SparkSession, path: String) {
     "id LONG, dataset_id LONG, original_id STRING, geometry BINARY, " +
     "original_attributes STRING, updated_at TIMESTAMP")
 
-  private def dsRoot(datasetId: Long) = s"$path/ds=$datasetId"
+  private val snapshots = new PartitionedStore.Snapshots(spark, path, "ds", schema)
 
-  private def latestVersionOf(datasetId: Long): Option[Int] = {
-    val p = Paths.get(dsRoot(datasetId), "_latest")
-    if (Files.exists(p)) Some(new String(Files.readAllBytes(p)).trim.toInt) else None
-  }
-
-  /** datasets with at least one committed snapshot */
-  def datasets: Seq[Long] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) Nil
-    else {
-      val b = Seq.newBuilder[Long]
-      val st = Files.list(root) // closed below: holds an open directory fd
-      try st.forEach { d =>
-        val n = d.getFileName.toString
-        if (n.startsWith("ds=") && Files.exists(d.resolve("_latest")))
-          b += n.stripPrefix("ds=").toLong
-      } finally st.close()
-      b.result().sorted
-    }
-  }
-
-  private def empty: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** latest snapshot of ONE dataset (partition-pruned read). */
-  def itemsFor(datasetId: Long): DataFrame = latestVersionOf(datasetId) match {
-    // explicit schema: an all-pruned snapshot dir may contain zero part files
-    case Some(v) => spark.read.schema(schema).parquet(s"${dsRoot(datasetId)}/v=$v")
-    case None    => empty
-  }
-
-  /** current item table across all datasets. */
-  def items(): DataFrame =
-    datasets.map(itemsFor).reduceOption(_ unionByName _).getOrElse(empty)
-
-  private def commit(datasetId: Long, df: DataFrame): Unit = {
-    val v = latestVersionOf(datasetId).getOrElse(0) + 1
-    df.select(schema.fieldNames.map(col): _*)
-      .write.mode("overwrite").parquet(s"${dsRoot(datasetId)}/v=$v")
-    Files.write(Paths.get(dsRoot(datasetId), "_latest"), v.toString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-  }
+  // datasets with a committed snapshot; one dataset's latest snapshot (a
+  // pruned read); the current item table across all datasets
+  def datasets: Seq[Long] = snapshots.keys.map(_.toLong).sorted
+  def itemsFor(datasetId: Long): DataFrame = snapshots.latest(datasetId.toString)
+  def items(): DataFrame = snapshots.latest(datasets.map(_.toString))
 
   /** full refresh: replace one dataset partition wholesale. */
   def fullRefresh(datasetId: Long, batch: DataFrame): Unit = {
@@ -112,7 +72,7 @@ class UpstreamSync(spark: SparkSession, path: String) {
       .withColumn("dataset_id", lit(datasetId))
       .withColumn("id", itemId(datasetId))
     auditIds(fresh)
-    commit(datasetId, fresh)
+    snapshots.commit(datasetId.toString, fresh, s"fullRefresh:ds=$datasetId")
   }
 
   /** keyed upsert + prune-deleted on (dataset_id, original_id). */
@@ -143,7 +103,7 @@ class UpstreamSync(spark: SparkSession, path: String) {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val fresh = flagged.filter(col("__st") =!= "p").drop("__st")
     auditIds(fresh)
-    commit(datasetId, fresh)
+    snapshots.commit(datasetId.toString, fresh, s"upsert:ds=$datasetId")
     flagged.unpersist(); existing.unpersist(); b.unpersist()
     (cnts.getOrElse("u", 0L), cnts.getOrElse("i", 0L), cnts.getOrElse("p", 0L))
   }

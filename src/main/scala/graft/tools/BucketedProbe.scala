@@ -107,7 +107,7 @@ object BucketedProbe {
 
     s.sql("DROP TABLE IF EXISTS bucketed_probe_p")
     s.sql("DROP TABLE IF EXISTS bucketed_probe_b")
-    graft.engine.MatchStore.deleteRecursively(java.nio.file.Paths.get(dir))
+    graft.engine.PartitionedStore.deleteRecursively(java.nio.file.Paths.get(dir))
     s.stop()
   }
 }

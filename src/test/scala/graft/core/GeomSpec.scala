@@ -37,6 +37,9 @@ class GeomSpec extends AnyFunSuite {
   test("distance point-point / point-segment / point-polygon") {
     assert(Geom.distance(Geom.point(0, 0), Geom.point(3, 4)) == 5.0)
     assert(Geom.distance(Geom.point(5, 5), Geom.line((0, 0), (10, 0))) == 5.0)
+    // a one-vertex line is its vertex
+    assert(Geom.distance(Geom.point(0, 0), LineStringG(Array(Pt(5, 0)))) == 5.0)
+    assert(Geom.dwithin(Geom.point(2000, 1000), Geom.point(2050, 1050), 100))
     val poly = Geom.envelopePoly(0, 0, 10, 10)
     assert(Geom.distance(Geom.point(5, 5), poly) == 0.0)       // inside
     assert(Geom.distance(Geom.point(15, 5), poly) == 5.0)      // outside
@@ -218,6 +221,9 @@ class GeomSpec extends AnyFunSuite {
     assert(tx >= 0 && tx < (1 << 14) && ty >= 0 && ty < (1 << 14))
     // Gävle is ~17.14E — z14 tile x ≈ (17.14+180)/360*16384 ≈ 8972
     assert(math.abs(tx - 8972) <= 2, s"tile x $tx")
+    assert((tx, ty) == (8972, 4696))
+    // near the projection zone's west edge
+    assert(Proj.tileOfSweref(106256, 6073000, 14) == (8596, 5209))
   }
 
   test("EWKB/ISO Z and M flags: extra ordinates skipped, XY preserved (ADVICE r1)") {

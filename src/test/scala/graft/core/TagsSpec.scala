@@ -142,6 +142,7 @@ class TagsSpec extends AnyFunSuite {
   test("tag_diff: null maps behave as empty") {
     assert(Tags.tagDiff(null, Map("a" -> "1")) == Map("a" -> "1"))
     assert(Tags.tagDiff(Map("a" -> "1"), null) == Map.empty)
+    assert(Tags.tagDiff(null, null) == Map.empty)
     // property: tagDiff(t, t) == {}
     val t = Map("x" -> "1", "phone" -> "070", "website" -> "https://e.com")
     assert(Tags.tagDiff(t, t) == Map.empty)
@@ -167,6 +168,7 @@ class TagsSpec extends AnyFunSuite {
     // original's space survives — double space is the reference's behavior.
     assert(Tags.fixPhone("0046 12345678") == "+46  12345678")
     assert(Tags.fixPhone("004612345678") == "+46 12345678")
+    assert(Tags.fixPhone("") == "")
   }
 
   // ---- process_school_tags (13:1-14) ----

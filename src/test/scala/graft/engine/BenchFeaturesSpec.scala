@@ -44,4 +44,19 @@ class BenchFeaturesSpec extends AnyFunSuite {
     assert(rowSum(upsOld.selectExpr(upsCols: _*)) ==
       rowSum(upsNew.selectExpr(upsCols: _*)), "ups side diverged")
   }
+
+  test("releaseSharedInputs unpersists the session's shared inputs; a fresh call refills them") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    val (osm, ups) = BenchPipeline.sharedInputs(spark, 200L)
+    assert(osm.count() > 0 && ups.count() > 0)
+    assert(osm.storageLevel != NONE && ups.storageLevel != NONE)
+    assert(BenchPipeline.sharedInputs(spark, 200L) == ((osm, ups)), "memoized per session")
+    BenchPipeline.releaseSharedInputs(spark)
+    assert(osm.storageLevel == NONE && ups.storageLevel == NONE)
+    val (osm2, ups2) = BenchPipeline.sharedInputs(spark, 200L)
+    assert(!(osm2 eq osm) && !(ups2 eq ups), "a released entry must not be served again")
+    assert(osm2.storageLevel != NONE && ups2.storageLevel != NONE)
+    assert(osm2.count() == osm.count())
+    BenchPipeline.releaseSharedInputs(spark)
+  }
 }

@@ -84,7 +84,7 @@ class ElementStoreSpec extends AnyFunSuite {
     es.merge("elements", Seq("type", "id"),
       df(("n", 1L, 5000.0, 5000.0), ("n", 2L, 105000.0, 105000.0)))
     // simulate a crash that persisted data but lost the index
-    MatchStore.deleteRecursively(java.nio.file.Paths.get(dir, "elements", "idx"))
+    PartitionedStore.deleteRecursively(java.nio.file.Paths.get(dir, "elements", "idx"))
     val oldBlock = es.read("elements", None).filter(col("id") === 2)
       .select("cb").collect()(0).getLong(0)
     // next merge MOVES feature 2: the rebuilt index must find its old block

@@ -29,7 +29,7 @@ class MatchStoreSpec extends AnyFunSuite {
     // (drop the cache first — it would otherwise serve the deleted files)
     before.unpersist(blocking = true)
     val vdir = java.nio.file.Paths.get(dir, "data", s"range=$victim")
-    MatchStore.deleteRecursively(vdir)
+    PartitionedStore.deleteRecursively(vdir)
     assert(store.read().filter(col("range") === victim).count() == 0)
 
     store.resume(BenchPipeline.matchRows(pages), Seq(victim), "test")

@@ -62,6 +62,25 @@ class UpstreamSyncSpec extends AnyFunSuite {
     assert(byDs == Map(7L -> 1L, 8L -> 1L))
   }
 
+  test("every commit records its _metrics lineage; a never-synced dataset is a 0-byte local relation") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("upssync_meta").toString
+    val sync = new UpstreamSync(spark, dir)
+    sync.fullRefresh(7L, batch(("a", pt(1, 1), """{"v":1}""", ts)))
+    sync.upsert(7L, batch(("a", pt(1, 2), """{"v":2}""", ts2), ("b", pt(2, 2), "{}", ts2)))
+    val metrics = Paths.get(dir, "ds=7", "_metrics", "2.json")
+    assert(Files.exists(metrics), "an upsert must write its metrics file")
+    val json = new String(Files.readAllBytes(metrics), "UTF-8")
+    assert(json.contains("\"version\":2") && json.contains("upsert"), json)
+
+    val none = sync.itemsFor(99L)
+    val plan = none.queryExecution.analyzed
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(plan.stats.sizeInBytes == 0)
+    def typed(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(typed(none) == typed(sync.itemsFor(7L)) && none.count() == 0)
+  }
+
   test("a batch with duplicate original_ids is rejected loudly (PG ON CONFLICT parity)") {
     val dir = java.nio.file.Files.createTempDirectory("upssync_dup").toString
     val sync = new UpstreamSync(spark, dir)
