@@ -113,16 +113,17 @@ object SparkEntry {
   /** One rows-only gate entry per ported reference dataset view (20/20),
     * exercised end-to-end on synthesized per-dataset pages. The extracted
     * inputs are synthesized once per session and cached — all 20 entries
-    * share them (the driver runs the queries sequentially). */
-  private val dsInputs =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, (DataFrame, DataFrame, DataFrame)]()
-  private def datasetInputs(s: SparkSession): (DataFrame, DataFrame, DataFrame) =
-    dsInputs.computeIfAbsent(s, s => {
+    * share them (the driver runs the queries sequentially) until
+    * `BenchPipeline.releaseSharedInputs`. */
+  private[graft] def datasetInputs(s: SparkSession): (DataFrame, DataFrame, DataFrame) = {
+    val Seq(osm, items, munis) = graft.engine.BenchPipeline.memoInputs(s, "datasets") {
       val pages = graft.sources.DatasetPages.synthesize(s, 150L)
-      (graft.sources.Pages.extractOsmElements(pages).cache(),
-       graft.sources.Pages.extractUpstreamItems(pages).cache(),
-       graft.sources.Pages.extractMunicipalities(pages).cache())
-    })
+      Seq(graft.sources.Pages.extractOsmElements(pages),
+        graft.sources.Pages.extractUpstreamItems(pages),
+        graft.sources.Pages.extractMunicipalities(pages))
+    }
+    (osm, items, munis)
+  }
 
   private val datasetQueries: Map[String, (SparkSession, String) => DataFrame] =
     graft.engine.DatasetRegistry.all.map { vd =>

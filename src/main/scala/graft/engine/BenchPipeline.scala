@@ -72,7 +72,7 @@ object BenchPipeline {
     projectUps(Pages.extractUpstreamItems(pages)))
 
   /** ONE filtered+parsed pass over the pages for BOTH match sides (r6,
-    * guide §1.2 "remove unnecessary passes"): the old cacheInputs path
+    * guide §1.2 "remove unnecessary passes"): the earlier path
     * cached osm and ups separately, and each cache FILL re-ran the full
     * page synthesis + text build (measured 45.9 s + 46.5 s of the 8-core
     * pipeline's 263 s total executor time). This pass filters to feature
@@ -123,25 +123,21 @@ object BenchPipeline {
       array(col("id")).as("ids"), col("tags"), col("geom").as("geometry"),
       col("cx"), col("cy"), col("is_point")))
 
-  /** @param cacheInputs materialize the extracted sides once — the match DAG
-    *   consumes each side three times (leg-1 candidates, anti candidates,
-    *   anti left_anti); at production scale these are one Iceberg scan each
-    *   (the reference materializes mv_match too), so caching is the honest
-    *   equivalent, not a benchmark trick. r6: the cached frame is the fused
-    *   single-pass [[benchFeatures]] — one synthesis feeds both sides. */
-  def matchRows(pages: DataFrame, saltThreshold: Long = Long.MaxValue,
-                cacheInputs: Boolean = true): DataFrame = {
-    val (osm, ups) =
-      if (cacheInputs) {
-        val feat = benchFeatures(pages).cache()
-        // eager fill: the match DAG's four consumer stages start
-        // CONCURRENTLY (AQE off, one job) and a lazily-filled cache makes
-        // the first readers RACE — each recomputes synthesis for partitions
-        // not yet stored (measured: 59 s + 28 s of duplicated fill work at
-        // 8c). One count() fills every partition exactly once up front.
-        feat.count()
-        sidesFromFeatures(feat)
-      } else extract(pages)
+  /** Match straight from pages. Both sides are projected from ONE cached
+    * [[benchFeatures]] frame (one synthesis feeds both). The match view
+    * reads each side twice — its cell cover in the one candidate join, its
+    * sentinel rows in the rank's union — and at production scale each side
+    * is one Iceberg scan (the reference materializes mv_match too), so
+    * caching is the honest equivalent, not a benchmark trick. */
+  def matchRows(pages: DataFrame, saltThreshold: Long = Long.MaxValue): DataFrame = {
+    val feat = benchFeatures(pages).cache()
+    // eager fill: the match DAG's consumer stages start CONCURRENTLY (AQE
+    // off, one job) and a lazily-filled cache makes the first readers RACE —
+    // each recomputes synthesis for partitions not yet stored (measured:
+    // 59 s + 28 s of duplicated fill work at 8c). One count() fills every
+    // partition exactly once up front.
+    feat.count()
+    val (osm, ups) = sidesFromFeatures(feat)
     matchRowsFrom(osm, ups, saltThreshold)
   }
 
@@ -152,25 +148,29 @@ object BenchPipeline {
                     saltThreshold: Long = Long.MaxValue): DataFrame =
     MatchEngine.matchView(osm, ups, config(saltThreshold))
 
-  /** memoized extracted inputs for the driver-gate entries: the five
-    * q_pipe_* queries consume the same synthesized corpus within one
-    * session — one shared cached pair replaces five leaked ones. Held until
-    * [[releaseSharedInputs]] for the session. */
-  private val sharedInputCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Long), (DataFrame, DataFrame)]()
-  def sharedInputs(spark: SparkSession, nSites: Long = 3000L): (DataFrame, DataFrame) =
-    sharedInputCache.computeIfAbsent((spark, nSites), { case (s, n) =>
-      val (osm, ups) = extract(Pages.synthesize(s, n))
-      (osm.cache(), ups.cache())
-    })
+  /** cached gate inputs, memoized per (session, key) until
+    * [[releaseSharedInputs]]: gate entries that consume the same synthesized
+    * corpus within one session share one cached set of frames */
+  private val inputMemo =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[DataFrame]]()
+  private[graft] def memoInputs(spark: SparkSession, key: String)(fill: => Seq[DataFrame]): Seq[DataFrame] =
+    inputMemo.computeIfAbsent((spark, key), _ => fill.map(_.cache()))
 
-  /** unpersists `spark`'s shared inputs and drops them from the memo, so a
-    * stopped session is not pinned; a later [[sharedInputs]] fills afresh */
+  /** the extracted (osm, ups) pair the five q_pipe_* entries share */
+  def sharedInputs(spark: SparkSession, nSites: Long = 3000L): (DataFrame, DataFrame) = {
+    val Seq(osm, ups) = memoInputs(spark, s"pipe-$nSites") {
+      val (o, u) = extract(Pages.synthesize(spark, nSites))
+      Seq(o, u)
+    }
+    (osm, ups)
+  }
+
+  /** unpersists every frame [[memoInputs]] holds for `spark` and drops it
+    * from the memo, so a stopped session is not pinned; a later call fills
+    * afresh */
   def releaseSharedInputs(spark: SparkSession): Unit =
-    sharedInputCache.keySet.forEach { k =>
-      if (k._1 eq spark) Option(sharedInputCache.remove(k)).foreach { case (osm, ups) =>
-        osm.unpersist(); ups.unpersist()
-      }
+    inputMemo.keySet.forEach { k =>
+      if (k._1 eq spark) Option(inputMemo.remove(k)).foreach(_.foreach(_.unpersist()))
     }
 
   def deviations(matchDf: DataFrame): DataFrame =

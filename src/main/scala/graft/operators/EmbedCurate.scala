@@ -113,7 +113,7 @@ object EmbedCurate {
   }
 
   /** cell-scoped near-dup edges from an assigned frame. */
-  private[graft] def cellEdges(assigned: DataFrame, threshold: Double): DataFrame = {
+  private def cellEdges(assigned: DataFrame, threshold: Double): DataFrame = {
     val a = assigned.select(col("cell"), col("id").as("a_id"),
       col("vd").as("avd"), col("vnorm").as("an"))
     val b = assigned.select(col("cell"), col("id").as("b_id"),

@@ -210,7 +210,7 @@ object Similarity {
     // cache ONLY when Lloyd rounds will re-read the training set (iters+1
     // full scans otherwise at the 10^12-row design point); at iters=0 the
     // single TakeOrdered init is the only read and a cache is pure wasted
-    // materialization (EmbedProbe measured it inside semDedup's profile)
+    // materialization (measured inside semDedup's profile, BASELINE.md §3f)
     val train = {
       val t = withNorm(train0, embCol)
         .select(col(idCol).as("id"), col("vd"), col("vnorm"))
@@ -249,9 +249,9 @@ object Similarity {
   }
 
   /** codegen'd argmax-cosine assignment (graft.plans.NearestCell) — the
-    * corpus-sized cell-assignment path. Replaced the boxed-Seq UDF below
-    * after EmbedProbe measured the UDF at ~270 Mflop/s as the dominant
-    * semDedup/IVF stage; the UDF remains as the parity reference
+    * corpus-sized cell-assignment path. Replaced the boxed-Seq UDF below,
+    * which ran at ~270 Mflop/s as the dominant semDedup/IVF stage
+    * (BASELINE.md §3f); the UDF remains as the parity reference
     * (SimilaritySpec pins expression == udf row for row). */
   private[graft] def nearestCellCol(centroids: Array[Array[Double]])(
       vd: Column, vn: Column): Column = {
@@ -261,9 +261,8 @@ object Similarity {
   }
 
   /** nearest centroid by cosine (centroid norms precomputed per executor) —
-    * private[graft] so the EmbedProbe decomposition can time the assignment
-    * pass in isolation, and the parity reference for nearestCellCol. */
-  private[graft] def nearestCellUdf(centroids: Array[Array[Double]]) = {
+    * the parity reference for nearestCellCol. */
+  private[operators] def nearestCellUdf(centroids: Array[Array[Double]]) = {
     val norms = centroids.map(c => math.sqrt(c.map(x => x * x).sum))
     udf((v: Seq[Double], vn: Double) => {
       var best = 0; var bestCos = Double.MinValue

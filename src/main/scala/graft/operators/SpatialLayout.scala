@@ -10,54 +10,76 @@ import graft.core.cell.Morton
 /**
  * Z-order file layout for spatial scans (SURVEY.md §4, "spatial index" row):
  * joins use the cell-grid equi-join; SCANS get their file skipping here.
- * `writeZOrdered` range-partitions and sorts by the Morton code of the
- * row's grid cell, so every parquet file (and row group) holds a tight,
- * disjoint z-interval; `bboxFilter` turns a bounding box into a few z-code
- * BETWEENs (Morton.ranges) AND'd with the exact coordinate bounds. The
+ * `writeZOrdered` splits at z-code quantiles and sorts by the Morton code
+ * of the row's grid cell, so every parquet file (and row group) holds a
+ * tight, disjoint z-interval; `bboxFilter` turns a bounding box into a few
+ * z-code BETWEENs (Morton.ranges) AND'd with the exact coordinate bounds. The
  * BETWEENs are plain comparisons on a stored column → they reach the
  * parquet reader as PushedFilters and skip whole files/row groups by
  * min-max stats — the 100 TB path for "read one municipality's extent off
  * a continent-sized table" (plan- and metrics-asserted in SpatialLayoutSpec).
  *
- * The z-code column form is pure shift/and arithmetic (whole-stage codegen,
- * no UDF), bit-identical to Morton.interleave — the q_sp_zorder oracle
- * recomputes it in DuckDB.
+ * The z-code column is one codegen'd expression (graft.plans.MortonCode,
+ * no UDF) calling Morton.interleave — the q_sp_zorder oracle recomputes it
+ * in DuckDB with the same five spread steps.
  */
 object SpatialLayout {
 
-  /** Morton.spread as column arithmetic (codegen'd; bit-identical). */
-  private def spreadCol(v: Column): Column = {
-    var x = v.bitwiseAND(lit(0x7FFFFFFFL))
-    x = (x.bitwiseOR(shiftleft(x, 16))).bitwiseAND(lit(0x0000FFFF0000FFFFL))
-    x = (x.bitwiseOR(shiftleft(x, 8))).bitwiseAND(lit(0x00FF00FF00FF00FFL))
-    x = (x.bitwiseOR(shiftleft(x, 4))).bitwiseAND(lit(0x0F0F0F0F0F0F0F0FL))
-    x = (x.bitwiseOR(shiftleft(x, 2))).bitwiseAND(lit(0x3333333333333333L))
-    x = (x.bitwiseOR(shiftleft(x, 1))).bitwiseAND(lit(0x5555555555555555L))
-    x
-  }
-
   /** z-code of the (floor(x/cellSize), floor(y/cellSize)) grid cell.
     * Coordinates must be non-negative (EPSG:3006 northing/easting are). */
-  def zOrderCol(x: Column, y: Column, cellSize: Double): Column =
-    spreadCol(floor(x / cellSize).cast("long"))
-      .bitwiseOR(shiftleft(spreadCol(floor(y / cellSize).cast("long")), 1))
+  def zOrderCol(x: Column, y: Column, cellSize: Double): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(graft.plans.MortonCode(
+      GraftBridge.expression(floor(x / cellSize).cast("long")),
+      GraftBridge.expression(floor(y / cellSize).cast("long"))))
+  }
 
   /** Attach the z-code as `zval`. */
   def withZOrder(df: DataFrame, xCol: String, yCol: String, cellSize: Double): DataFrame =
     df.withColumn("zval", zOrderCol(col(xCol), col(yCol), cellSize))
 
+  /** z-code sample points drawn per output file to place the boundaries */
+  private val SamplePerFile = 100
+  /** seed of the boundary sample: the split depends on the rows alone */
+  private val BoundarySeed = 42L
+  /** how far, in files, a boundary may move off its quantile */
+  private val BoundarySlack = 0.25
+
   /**
-   * Cluster to `numFiles` parquet files by z-code: range partitioning makes
-   * the per-file z-intervals disjoint, the within-partition sort makes row
-   * groups tight. One shuffle, once, at write time — every later bbox scan
-   * pays only for the files its z-ranges touch.
+   * Cluster to `numFiles` parquet files by z-code: file i holds the zvals
+   * from boundary i to boundary i+1, so the per-file z-intervals are
+   * disjoint, and the within-partition sort makes row groups tight. One
+   * shuffle, once, at write time — every later bbox scan pays only for the
+   * files its z-ranges touch.
+   *
+   * Boundary i lies within [[BoundarySlack]] files of the i-th quantile of
+   * a fixed-seed `zval` sample, so files stay balanced; inside that window
+   * it is the z-code aligned to the coarsest quadtree block, so each file
+   * is a union of whole blocks and a bbox touches few of them. The split
+   * depends only on the input (its rows and partitioning), never on what
+   * the session ran before — `repartitionByRange` seeds its sample from RDD
+   * ids.
    */
   def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
-                    cellSize: Double, numFiles: Int = 32): Unit =
-    withZOrder(df, xCol, yCol, cellSize)
-      .repartitionByRange(numFiles, col("zval"))
+                    cellSize: Double, numFiles: Int = 32): Unit = {
+    val z = withZOrder(df, xCol, yCol, cellSize)
+    val sample = z.select("zval").orderBy(rand(BoundarySeed))
+      .limit(SamplePerFile * numFiles).collect().map(_.getLong(0)).sorted
+    def at(file: Double): Long =
+      sample(math.min(sample.length - 1, (file * sample.length / numFiles).toInt))
+    val bounds = if (sample.isEmpty) Nil else (1 until numFiles)
+      .map(i => blockAligned(at(i - BoundarySlack), at(i + BoundarySlack))).distinct
+    val file = bounds.map(b => (col("zval") >= b).cast("int")).foldLeft(lit(0))(_ + _)
+    z.repartitionById(numFiles, file)
       .sortWithinPartitions("zval")
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** the z-code in [lo, hi] that is a multiple of the largest power of 4 —
+    * the start of the coarsest quadtree block beginning inside the range */
+  private def blockAligned(lo: Long, hi: Long): Long =
+    (31 to 0 by -1).iterator.map(k => -Math.floorDiv(-lo, 1L << 2 * k) << 2 * k)
+      .find(_ <= hi).get
 
   /**
    * Pushdown-able bbox predicate over a z-ordered layout: OR of few zval

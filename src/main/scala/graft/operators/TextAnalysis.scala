@@ -191,8 +191,8 @@ object TextAnalysis {
    * localCheckpoint'ed and every downstream consumer (term stats, the
    * df-cap term set, the postings rank) reads the materialized table.
    * Without it Catalyst's partial-aggregate rewrite plans a separate
-   * corpus scan per consumer (three scans+explodes of the full corpus —
-   * measured in DriveWebGraph — because the rewritten stats subtree is no
+   * corpus scan per consumer (three scans+explodes of the full corpus in
+   * the executed plan, because the rewritten stats subtree is no
    * longer byte-identical to the postings one, so ReuseExchange can't
    * serve it). The tf table is the retrieval index's own size;
    * materializing it once is the right trade against re-reading 10^12

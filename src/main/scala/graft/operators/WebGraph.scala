@@ -110,7 +110,7 @@ object WebGraph {
    * optimize into non-identical subtrees (the anchor≠'' filter pushes into
    * one branch only), so without it each branch re-scans and re-regexes
    * the anchors input — the full corpus when composed over
-   * [[extractAnchors]] (measured in DriveWebGraph).
+   * [[extractAnchors]] (seen in the executed plan).
    */
   def anchorStats(anchors: DataFrame, dstCol: String, anchorCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

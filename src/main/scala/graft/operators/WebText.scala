@@ -653,7 +653,7 @@ object WebText {
    *
    * Scale: ONE shuffle on url — the rank window and the pivot groupBy key
    * on the same column, so the aggregation reuses the window's hash
-   * partitioning (no second Exchange; DriveWebGraph-audited); the set
+   * partitioning (no second Exchange; PlanQualitySpec pins it); the set
    * algebra runs as per-row array expressions on the two text payloads.
    * Groups are per-url crawl counts — the [[urlDedup]] no-salting
    * argument.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import graft.core.cell.Grid
+import graft.core.cell.{Grid, Morton}
 import graft.core.geom.Geom
 
 /**
@@ -179,4 +179,27 @@ case class RefCell(a: Expression, b: Expression, radius: Expression, cellSize: E
       newFirst: Expression, newSecond: Expression,
       newThird: Expression, newFourth: Expression): Expression =
     copy(a = newFirst, b = newSecond, radius = newThird, cellSize = newFourth)
+}
+
+/** Morton z-code of a non-negative (x, y) cell (Morton.interleave) as ONE
+  * expression node. A bbox filter over an in-plan z-code gets the code's
+  * defining expression substituted into each of its up to 128 range
+  * comparisons; written as column shift/and arithmetic each copy was ~1000
+  * nodes (every spread step references its input twice) and the filter's
+  * generated code outgrew the 64 KB method limit. */
+case class MortonCode(x: Expression, y: Expression) extends BinaryExpression {
+  override def left: Expression = x
+  override def right: Expression = y
+  override def dataType: DataType = LongType
+  override def nullIntolerant: Boolean = true
+
+  override protected def nullSafeEval(xv: Any, yv: Any): Any =
+    Morton.interleave(xv.asInstanceOf[Long], yv.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.core.cell.Morton.interleave($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(x = newLeft, y = newRight)
 }

@@ -17,7 +17,7 @@ object VecKernel {
     * `min(len)` dims, cos = d/(norm_c·vn) with −2.0 for zero norms, strict
     * `>` keeps the LOWEST index on ties. The codegen'd form exists because
     * the boxed-Seq UDF ran at ~270 Mflop/s and was the dominant stage of
-    * the semDedup/IVF profile (EmbedProbe sd_assign). */
+    * the semDedup/IVF profile (BASELINE.md §3f). */
   def nearestCell(v: ArrayData, cents: Array[Array[Double]],
                   norms: Array[Double], vn: Double): Int = {
     var best = 0; var bestCos = Double.MinValue

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Run one or more gate queries to parquet + dump their oracle SQL — the
   * fast path for iterating on `SparkEntry.queries` entries without a full
-  * Verify run (one Spark session amortized over the list).
+  * Verify run (one Spark session, the gate's, amortized over the list).
   * Usage: runMain graft.tools.DriveOne <name>[,<name>...] [sfDir] [outDir]
   */
 object DriveOne {
@@ -12,12 +10,7 @@ object DriveOne {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 2) args(2) else "/tmp/drive_one"
-    val spark = SparkSession.builder()
-      .appName(s"drive-one-${names.head}").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.gateCores, Sessions.Gate)
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown gate query: $name"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.{BenchPipeline, Tiles}
 import graft.sources.Pages
@@ -10,14 +9,7 @@ import graft.sources.Pages
 object DrivePipeline {
   def main(args: Array[String]): Unit = {
     val nSites = if (args.nonEmpty) args(0).toLong else 2000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-drive")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.gateCores, Sessions.Gate)
 
     val pages = Pages.synthesize(spark, nSites).cache()
     println(s"DRIVE pages=${pages.count()}")

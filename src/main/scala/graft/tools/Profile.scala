@@ -112,28 +112,13 @@ object Profile {
       (BenchPipeline.countsOf(frame), planShape(frame))
     }
 
-  private def session(cores: Int, aqe: Boolean): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-profile-$cores")
-      .config("spark.sql.shuffle.partitions", (if (aqe) cores * 2 else cores * 4).toString)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cores.toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   private def printStages(tag: String, rows: Seq[StageRow]): Unit = rows.foreach { r =>
     println(f"$tag id=${r.id}%3d wall=${r.wallMs}%7dms run=${r.runMs}%8dms " +
       f"shR=${r.shRead >> 20}%6dM shW=${r.shWrite >> 20}%6dM recs=${r.recs}%10d ${r.name.take(70)}")
   }
 
   private def runPipeline(coreList: Seq[Int], n: Long, reps: Int): Unit = coreList.foreach { cores =>
-    val spark = session(cores, aqe = false)
+    val spark = Sessions.local(cores, Sessions.Pipeline(aqe = false))
     def settle(): Unit = { spark.sharedState.cacheManager.clearCache(); System.gc() }
     BenchPipeline.pipelineCounts(spark, n min 20000L) // warm-up: codegen/JIT
     settle()
@@ -162,7 +147,7 @@ object Profile {
 
   private def runHeadline(sfDir: String, cpus: Int, trials: Int, planTag: String,
                           only: Set[String]): Unit = {
-    val spark = session(cpus, aqe = true)
+    val spark = Sessions.local(cpus, Sessions.Pipeline(aqe = true))
     graft.SparkEntry.queries("q1_agg")(spark, sfDir).count() // warm-up: codegen/JIT
     headline.filter(q => only.isEmpty || only(q)).foreach { name =>
       val fn = graft.SparkEntry.queries(name)

@@ -59,4 +59,20 @@ class BenchFeaturesSpec extends AnyFunSuite {
     assert(osm2.count() == osm.count())
     BenchPipeline.releaseSharedInputs(spark)
   }
+
+  test("releaseSharedInputs also releases the q_ds_* dataset inputs") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    def inputs(): Seq[DataFrame] = {
+      val (osm, items, munis) = graft.SparkEntry.datasetInputs(spark)
+      Seq(osm, items, munis)
+    }
+    val held = inputs()
+    assert(held.forall(_.storageLevel != NONE))
+    BenchPipeline.releaseSharedInputs(spark)
+    assert(held.forall(_.storageLevel == NONE), "released dataset inputs still cached")
+    val again = inputs()
+    assert(again.zip(held).forall { case (a, h) => !(a eq h) && a.storageLevel != NONE },
+      "a released entry must not be served again")
+    BenchPipeline.releaseSharedInputs(spark)
+  }
 }

@@ -99,7 +99,8 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("match candidate refinement stays native (no UDF filter)") {
     val pages = graft.sources.Pages.synthesize(spark, 100L)
-    val m = BenchPipeline.matchRows(pages, cacheInputs = false)
+    val (osm, ups) = BenchPipeline.extract(pages)
+    val m = BenchPipeline.matchRowsFrom(osm, ups)
     val p = finalPlan(m)
     // the dist refinement + match condition must appear as native SQRT /
     // map-key expressions (Catalyst rewrites map_contains_key to
