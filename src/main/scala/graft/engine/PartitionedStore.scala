@@ -49,6 +49,15 @@ object PartitionedStore {
       finally st.close()
     }
 
+  /** writes `text` to `p` through `p.tmp` renamed over `p` atomically, so a
+    * kill at any point leaves `p` whole: the previous text or the new one */
+  def writeAtomically(p: Path, text: String): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(UTF_8))
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
   /** highest `_metrics/<v>.json` version under `root`, 0 when none: durable
     * across JVM restarts, unlike a clock */
   def metricsVersion(root: String): Long =
@@ -101,9 +110,8 @@ object PartitionedStore {
       keys.map(latest).reduceOption(_ unionByName _).getOrElse(empty(spark, schema))
 
     /** Writes `df` as `key`'s next snapshot with its metrics and lineage,
-      * then flips the pointer: `_latest.tmp` written, then renamed over
-      * `_latest` atomically, so a kill at any point leaves the previous
-      * pointer intact. Returns the new version. */
+      * then flips the pointer with `writeAtomically`, so a kill at any point
+      * leaves the previous pointer intact. Returns the new version. */
     def commit(key: String, df: DataFrame, lineage: String): Int = {
       val v = currentVersion(key) + 1
       val out = df.select(schema.fieldNames.map(col): _*).cache()
@@ -113,10 +121,7 @@ object PartitionedStore {
         .collect().map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
       out.unpersist()
       writeMetrics(root(key), v, lineage, "partitions", counts.toSeq)
-      val tmp = Paths.get(root(key), "_latest.tmp")
-      Files.write(tmp, v.toString.getBytes(UTF_8))
-      Files.move(tmp, pointer(key), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      writeAtomically(pointer(key), v.toString)
       v
     }
   }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -162,11 +164,18 @@ object StreamingIngest {
    * ElementStore), not one per stored partition. Job budget of an edit batch
    * (the stream's session runs AQE off): the merges' fixed sets, the
    * frontier match and deviations, and 3 jobs for the scoped deviation-store
-   * sync — 20 jobs for an 8-site edit on a 500-site base, whatever the
-   * store's size. A failed merge fails the micro-batch after all three have
-   * finished, so the checkpoint does not advance. Restartable from
-   * `checkpointDir`; replays are idempotent because both merges are keyed
-   * upserts.
+   * sync — 19 jobs for an 8-site edit on a 500-site base, whatever the
+   * store's size. Each phase's jobs carry the tag `sync/<batchId>/stage`,
+   * `.../commit` or `.../frontier` (job tags, not a job group: the stream
+   * cancels its own run-id group on `stop()`). A failed merge fails the
+   * micro-batch after all three have finished, so the checkpoint does not
+   * advance. Restartable from `checkpointDir`; replays are idempotent
+   * because both merges are keyed upserts, and they converge because the
+   * frontier is durable: a commit rewrites the key index, so a replay no
+   * longer sees which keys the batch moved, and the frontier (with the
+   * moved keys' old blocks) is written to `<state>/_frontier/<batchId>`
+   * before the first commit, united with on replay, and deleted once the
+   * deviation store has committed.
    *
    * Codegen gate: compiling costs a fixed price per query, interpreting a
    * price per row, so each of a batch's three phases runs with whole-stage
@@ -180,18 +189,28 @@ object StreamingIngest {
    *     and index buckets (`ElementStore.Staged.bytes`);
    *  3. match, deviations and the deviation-store merge read the frontier's
    *     elements and items and the view's snapshot.
-   * An 8-site edit op of the `sync_edits` benchmark (a 500-site base) runs
-   * all three interpreted and compiles 29 classes with Janino instead of
-   * 236. An 8-site edit into a 20k-site base at the same density runs 1
-   * and 2 interpreted and 3, 1.9–3.9 MB, with codegen, and takes as long as
-   * with codegen throughout; keyed on the batch's files alone, all three
+   * Below the gate a phase also runs one shuffle partition and one file
+   * split per scan, so a stage runs one task (one per input of a union):
+   * a sub-MiB phase's rows are fewer than its tasks' fixed costs of
+   * scheduling, task deserialization and one shuffle file per map task and
+   * reduce partition. An 8-site edit op of the `sync_edits` benchmark (a
+   * 500-site base, seed 7, counted from an event log) runs all three phases
+   * this way: 19 jobs, 32 stages and 40 tasks per stream run, against 19,
+   * 33 and 152 with the session's 4 partitions; 29 Janino compiles either
+   * way, 236 with codegen throughout. An 8-site edit into a 20k-site base
+   * at the same density runs 1 and 2 interpreted and 3, 1.9–3.9 MB, with
+   * codegen, and takes as long as with codegen throughout; keyed on the batch's files alone, all three
    * ran interpreted and the median op took 18% longer (CHANGES.md). The
    * crossover, measured as a first sync of n sites into a fresh store on
    * 4 vCPUs (3 interleaved pairs, interpreted / codegen): 0.18 MB of pages
    * 3.4–5.3 / 4.8–6.7 s, 0.62 MB 5.4–6.7 / 6.2–7.0 s, 1.2 MB 7.5–8.3 /
-   * 7.6–8.9 s, 2.4 MB 10.4–12.9 / 9.8–11.8 s, 9.5 MB 37.6 / 25.5 s. No
-   * benchmark workload runs a phase above the gate; that side rests on
-   * this sweep and the 20k-site edits.
+   * 7.6–8.9 s, 2.4 MB 10.4–12.9 / 9.8–11.8 s, 9.5 MB 37.6 / 25.5 s. One
+   * task per stage against the session's 4 partitions, both interpreted,
+   * at the gate's top (3 interleaved pairs, one partition / session's): 0.62
+   * MB 6.0–6.3 / 8.3–9.7 s, 0.92 MB (all three phases still under the gate)
+   * 6.3–6.7 / 10.3–10.8 s; from 1.06 MB every phase runs above the gate and
+   * both run the same plans. No benchmark workload runs a phase above the
+   * gate; that side rests on these sweeps and the 20k-site edits.
    * The mode is set on the stream's own session (a clone of `spark`) for
    * the phase and restored after it; every Dataset of the batch is built
    * from that session, and `spark`'s conf is never touched.
@@ -214,48 +233,70 @@ object StreamingIngest {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val session = batch.sparkSession
-        syncBatch(session, batch, new graft.engine.ElementStore(session, state),
-          store.withSession(session))
+        syncBatch(session, batch, batchId, state, store.withSession(session))
       }
       .start()
   }
 
   /** Bytes a phase of a sync batch reads below which `startDeviationSync`
-    * runs the phase interpreted: just under the measured crossover of
+    * runs the phase as `SmallPhase`: just under the measured crossover of
     * ~1.2 MB, see its scaladoc. */
   private[streaming] val InterpretedBelowBytes: Long = 1L << 20
 
-  /** session confs that run a query without generated code: no whole-stage
-    * codegen, and interpreted projections, predicates and orderings */
-  private val NoCodegen = Seq(
+  /** session confs for a phase under `InterpretedBelowBytes`: no generated
+    * code (no whole-stage codegen; interpreted projections, predicates and
+    * orderings), and one shuffle partition and one file split per scan, so
+    * a stage runs one task per input */
+  private val SmallPhase = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.files.maxPartitionNum" -> "1")
 
-  /** runs `body` on `session` interpreted when it reads fewer than
-    * `InterpretedBelowBytes`, then restores what `session` held */
-  private def sized[T](session: SparkSession, bytes: BigInt)(body: => T): T = {
-    val kvs = if (bytes < InterpretedBelowBytes) NoCodegen else Nil
+  /** runs `body` on `session` with its jobs tagged `tag`, as `SmallPhase`
+    * when it reads fewer than `InterpretedBelowBytes`; then restores what
+    * `session` held */
+  private def phase[T](session: SparkSession, tag: String, bytes: BigInt)(body: => T): T = {
+    val kvs = if (bytes < InterpretedBelowBytes) SmallPhase else Nil
     val set = session.conf.getAll
     val before = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => session.conf.set(k, v) }
-    try body finally before.foreach {
-      case (k, Some(v)) => session.conf.set(k, v)
-      case (k, None) => session.conf.unset(k)
+    session.sparkContext.addJobTag(tag)
+    try body finally {
+      session.sparkContext.removeJobTag(tag)
+      before.foreach {
+        case (k, Some(v)) => session.conf.set(k, v)
+        case (k, None) => session.conf.unset(k)
+      }
     }
   }
 
+  /** `blocks` united with what an earlier attempt of the batch recorded in
+    * `file`, recorded there before any commit: the commit rewrites the key
+    * index, so a replay finds a moved key at its new block only, and the
+    * recorded set is what still names the old one */
+  private def recordFrontier(file: Path, blocks: Seq[Long]): Seq[Long] = {
+    val recorded = if (!Files.exists(file)) Nil
+      else new String(Files.readAllBytes(file), UTF_8).split('\n').filter(_.nonEmpty).map(_.toLong).toSeq
+    val all = (recorded ++ blocks).distinct
+    if (all.nonEmpty) graft.engine.PartitionedStore.writeAtomically(file, all.mkString("\n"))
+    all
+  }
+
   /** one micro-batch of `startDeviationSync`, every Dataset built from
-    * `session`, each phase run in the mode its own reads call for */
-  private def syncBatch(session: SparkSession, batch: DataFrame,
-                        es: graft.engine.ElementStore,
-                        store: graft.engine.DeviationStore): Unit = {
-    import graft.engine.{BenchPipeline, MatchEngine}
+    * `session`, each phase run in the mode its own reads call for and its
+    * jobs tagged `sync/<batchId>/<phase>` */
+  private def syncBatch(session: SparkSession, batch: DataFrame, batchId: Long,
+                        state: String, store: graft.engine.DeviationStore): Unit = {
+    import graft.engine.{BenchPipeline, ElementStore, MatchEngine}
     import graft.engine.ElementStore.bytesOf
     import graft.functions.GeoFunctions.stCentroid
     import graft.sources.Pages
+    val es = new ElementStore(session, state)
     val input = bytesOf(batch)
+    val tag = s"sync/$batchId"
     // 1. each sub-store's dirty blocks: reads the batch and key-index buckets
-    val staged = sized(session,
+    val staged = phase(session, s"$tag/stage",
         input + Seq("elements", "items", "changesets").map(es.indexBytes).sum) {
       val b = batch.cache()
       try concurrently(session, Seq(
@@ -267,14 +308,18 @@ object StreamingIngest {
         // batches without changeset pages (an empty stage writes nothing).
         () => es.stage("changesets", Seq("id"), Pages.extractChangesets(b),
           recencyCol = Some("created_at"))
-      ), (s: graft.engine.ElementStore.Staged) => s.abort())
+      ), (s: ElementStore.Staged) => s.abort())
       finally b.unpersist()
     }
-    // 2. the rewrite of those blocks: reads the batch and the dirty blocks;
-    // the frontier is the elements' and items' dirty blocks
-    val dirty = sized(session, input + staged.map(_.bytes).sum) {
+    // the frontier is the elements' and items' dirty blocks, durable from
+    // before the first commit until the deviation store has committed
+    val frontier = Paths.get(state, "_frontier", batchId.toString)
+    val dirty = try recordFrontier(frontier, staged.take(2).flatMap(_.dirtyBlocks))
+      catch { case e: Throwable => staged.foreach(_.abort()); throw e }
+    // 2. the rewrite of those blocks: reads the batch and the dirty blocks
+    phase(session, s"$tag/commit", input + staged.map(_.bytes).sum) {
       concurrently(session, staged.map(s => () => s.commit()))
-    }.take(2).flatten.distinct
+    }
     if (dirty.isEmpty) return
     // 3. match and deviations over the frontier, merged into the deviation
     // store: reads the frontier's elements and items and the view's snapshot.
@@ -287,7 +332,7 @@ object StreamingIngest {
     val readBlocks = scopeBlocks.map(es.ring)
     val elements = es.read("elements", readBlocks)
     val items = es.read("items", readBlocks)
-    sized(session, bytesOf(elements) + bytesOf(items) +
+    phase(session, s"$tag/frontier", bytesOf(elements) + bytesOf(items) +
         bytesOf(store.latestFor("bench_pois"))) {
       val view = BenchPipeline.deviations(MatchEngine.matchView(
         BenchPipeline.filterOsm(elements), BenchPipeline.projectUps(items),
@@ -301,6 +346,7 @@ object StreamingIngest {
           store.syncScoped("bench_pois", view.filter(inScope), scope = Some(inScope))
       }
     }
+    Files.delete(frontier)
   }
 
   /** Runs `tasks` on threads of their own that carry the caller's Spark

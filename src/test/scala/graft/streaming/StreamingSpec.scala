@@ -242,6 +242,99 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.conf.getAll == callerConf, "the replay changed the caller's conf")
   }
 
+  /** A stream over a synced 300-site base. `edit` appends one file that
+    * moves `n 1000000001`, the OSM node matched to upstream item s1, 150 km
+    * east, plus the base's pages at `urls`: s1's block then loses its match,
+    * and only the move's old block says so. */
+  private final class MovedMatch(name: String) {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory(s"${name}_pages").toString
+    val ckpt = Files.createTempDirectory(s"${name}_ckpt").toString
+    val state = Files.createTempDirectory(s"${name}_state").toString
+    val storeDir = Files.createTempDirectory(s"${name}_store").toString
+    val store = new DeviationStore(spark, storeDir)
+    def sync(): Unit =
+      StreamingIngest.startDeviationSync(spark, dir, ckpt, store, state).awaitTermination()
+    Pages.synthesize(spark, 300L).write.mode("append").parquet(dir)
+    sync()
+    val base = spark.read.parquet(dir).cache()
+    /** s1's "missing" deviations in the store */
+    def s1Missing(): Long = store.latestFor("bench_pois")
+      .filter(array_contains(col("upstream_item_ids"), 1000000000001L) &&
+        col("title") === "POI saknas").count()
+    assert(s1Missing() == 0, "s1 must start matched")
+    def edit(urls: Seq[String] = Nil): Unit = {
+      val node = base.filter(col("url") === "https://osm.example.sv/el/1000000001")
+        .withColumn("parts", split(col("text"), " ", 6))
+        .withColumn("text", concat_ws(" ", col("parts")(0), col("parts")(1), col("parts")(2),
+          format_string("%.3f", col("parts")(3).cast("double") + 150000.0),
+          col("parts")(4), col("parts")(5)))
+        .drop("parts")
+      val rows = node.unionByName(base.filter(col("url").isin(urls: _*))).collect()
+      assert(rows.length == 1 + urls.size)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), base.schema)
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+    /** runs the stream to its failure; the edit's batch must not commit */
+    def failingSync(): Unit = {
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](sync())
+      assert(!Files.exists(java.nio.file.Paths.get(ckpt, "commits", "1")))
+    }
+    /** the store converged, with s1 missing, and the frontier record gone */
+    def assertRecovered(): Unit = {
+      assert(Files.exists(java.nio.file.Paths.get(ckpt, "commits", "1")))
+      assert(s1Missing() == 1, "s1 lost its match and must be reported missing")
+      assertConverged(store, state)
+      assert(!Files.exists(java.nio.file.Paths.get(state, "_frontier", "1")),
+        "a committed batch must drop its frontier record")
+      base.unpersist()
+    }
+  }
+
+  test("a batch failing after its element-store commit converges on replay") {
+    import java.nio.file.{Files, Paths}
+    val m = new MovedMatch("stream_replay")
+    m.edit()
+    // junk in the view's pointer: phase 3's first read of the store throws,
+    // after phase 2 has committed the move to the element store
+    val pointer = Paths.get(m.storeDir, "view=bench_pois", "_latest")
+    val good = Files.readAllBytes(pointer)
+    Files.write(pointer, "junk".getBytes("UTF-8"))
+    m.failingSync()
+    Files.write(pointer, good)
+    m.sync()
+    m.assertRecovered()
+  }
+
+  test("a batch whose items commit fails after the elements commit moved a key converges") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val m = new MovedMatch("stream_subfail")
+    // an upstream item far from s1 rides along: its update makes the items
+    // commit read its stored block, while the elements commit moves the node
+    val es = new graft.engine.ElementStore(spark, m.state)
+    val far = es.read("items").filter(col("original_id") =!= "s1" &&
+        (abs(col("cx") - es.read("items").filter(col("original_id") === "s1")
+          .select("cx").head().getDouble(0)) > 60000.0))
+      .orderBy("original_id").select("original_id").head().getString(0)
+    m.edit(Seq(s"https://data.example.sv/bench/item/${far.stripPrefix("s")}"))
+    // junk in every items data file: the items stage reads only its key index
+    // and passes; its commit reads the far item's block and fails, while the
+    // concurrent elements commit succeeds
+    val data = Paths.get(m.state, "items", "data")
+    val files = {
+      val st = Files.walk(data)
+      try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toVector
+      finally st.close()
+    }
+    val saved: Map[Path, Array[Byte]] = files.map(f => f -> Files.readAllBytes(f)).toMap
+    files.foreach(f => Files.write(f, "junk".getBytes("UTF-8")))
+    m.failingSync()
+    saved.foreach { case (f, b) => Files.write(f, b) }
+    m.sync()
+    m.assertRecovered()
+  }
+
   /** the sync store equals a batch recompute over the element state */
   private def assertConverged(store: DeviationStore, state: String): Unit = {
     val es = new graft.engine.ElementStore(spark, state)
@@ -256,6 +349,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.select(keep: _*).exceptAll(got).isEmpty &&
       got.exceptAll(want.select(keep: _*)).isEmpty,
       "the synced store must equal a batch recompute over the element state")
+  }
+
+  /** `body`'s value and the tasks of every stage of the jobs that
+    * `startDeviationSync` tagged while it ran, by phase */
+  private def syncStageTasks[T](body: => T): (T, Map[String, Seq[Int]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val flush = s"sync-flush-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    @volatile var flushed = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(","))
+        if (tags.contains(flush)) flushed = true
+        for (t <- tags if t.startsWith("sync/"); s <- e.stageInfos)
+          seen.add(t.split("/").last -> s.numTasks)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // listener events arrive in order: once the flush job shows up, every
+      // job of `body` has been seen
+      sc.addJobTag(flush)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(flush)
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (!flushed && System.nanoTime < deadline) Thread.sleep(20)
+      assert(flushed, "listener did not see the flush job")
+      (out, seen.asScala.toSeq.groupMap(_._1)(_._2))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("edit-sized sync batches run interpreted; batches above the gate keep codegen") {
@@ -300,13 +425,19 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     edit(0)
-    val small = compiles(sync())
+    val (small, smallTasks) = syncStageTasks(compiles(sync()))
     // what still compiles are executor-side classes Spark generates with no
     // interpreted form (cached-relation column accessors, the partial
     // aggregate's row joiner, the sink's own scan of the batch), each once
     // per query: a stream start clones the session, and executors give each
     // session a class loader, and so a codegen cache, of its own
     assert(small <= 20, s"an 8-row edit batch compiled $small classes")
+    // one shuffle partition and one file split per scan: a stage runs one
+    // task, except over a union of one-partition inputs, one task each (the
+    // rank's pairs and two sentinel sides are the widest, 3)
+    assert(smallTasks.keySet == Set("stage", "commit", "frontier"), smallTasks.keySet)
+    assert(smallTasks("stage").forall(_ == 1), s"stage tasks ${smallTasks("stage")}")
+    assert(smallTasks.values.flatten.forall(_ <= 3), s"an 8-row edit batch ran $smallTasks")
     assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
 
     // an edit batch whose files stay under the gate, into a store whose
@@ -322,11 +453,16 @@ class StreamingSpec extends AnyFunSuite {
 
     // a batch whose own files are above the gate
     edit(2)
-    val large = syncScaled(1000000L)
+    val (large, largeTasks) = syncStageTasks(syncScaled(1000000L))
     assert(large > 5 * small,
       s"a batch above the gate compiled $large classes, the edit batch $small")
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(largeTasks.keySet == Set("stage", "commit", "frontier") &&
+      largeTasks.values.forall(_.max >= partitions),
+      s"every phase of a batch above the gate keeps $partitions-task stages: $largeTasks")
     assert(spark.conf.getAll == callerConf, "the sync changed the caller's conf")
-    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(k =>
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode",
+        "spark.sql.files.maxPartitionNum").foreach(k =>
       assert(!spark.conf.getAll.contains(k), s"the caller's conf holds $k"))
     assertConverged(store, state)
   }
